@@ -33,14 +33,18 @@ from camden_spark.operators.exact import (
     duplicate_groups,
     exact_dedup_clusters,
 )
-from camden_spark.operators.lsh import candidate_pairs_lsh, verify_pairs_jaccard
+from camden_spark.operators.lsh import candidate_pairs_lsh
 from camden_spark.operators.simhash import candidate_pairs_simhash
 from camden_spark.operators.substr import (
     candidate_pairs_substr,
     verify_pairs_substr,
-    with_fingerprints,
 )
-from camden_spark.plans.pipeline import DedupPipeline
+from camden_spark.plans.pipeline import (
+    DedupPipeline,
+    fingerprints,
+    lsh_pairs,
+    signatures,
+)
 from camden_spark.sources.pages import normalize_pages, pages_from_documents
 
 CFG = DedupConfig()
@@ -1871,75 +1875,27 @@ JOIN repc rc ON rc.rep_doc_id = ri.rep_doc_id
 SQL_PIPELINE_WEBTEXT_BOUNDED = _pipeline_webtext_oracle_sql()
 
 
-def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-7 shape: the PIPELINE's payload discipline (plans/pipeline.py
-    build_lsh) applied to the standalone query — signatures cross the Arrow
-    wire WITHOUT the ~1.6 KB/row shingle arrays (struct fields of a UDF
-    result are not Catalyst-prunable, so the old `select` still shipped
-    them in all three sig-consuming passes), and shingle sets are
-    recomputed for just the candidate-pair urls before the exact-Jaccard
-    verify.  Identical results by construction (same kernels, same
-    candidate set, same verify inputs) — checksum-verified."""
-    from camden_spark.functions.shingles import with_shingles
-    from camden_spark.plans.caches import materialize_barrier
-
-    pages = normalize_pages(
+def _pair_query_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return normalize_pages(
         _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
-    # empty docs never near-dup (policy): n_shingles carries the filter the
-    # shingle arrays used to
-    sig = (
-        with_signatures(pages, CFG, include_shingles=False)
-        .filter(F.col("n_shingles") > 0)
-        .select("url", "minhash")
-    )
-    cand, _ = candidate_pairs_lsh(sig, CFG)
-    # barrier: the candidate set feeds the pair-url pruning AND the verify
-    # join — without it both consumers recompute the band-join subtree
-    # (same rationale/measurement as the pipeline's build_lsh)
-    cand = materialize_barrier(cand)
-    pair_urls = (
-        cand.select(F.col("url_a").alias("url"))
-        .union(cand.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
-    sh = with_shingles(
-        pages.select("url", "norm_text").join(pair_urls, "url", "left_semi"),
-        CFG,
-    )
-    return verify_pairs_jaccard(cand, sh, CFG)
+
+
+def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pages = _pair_query_pages(spark, sf_dir)
+    pairs, _ = lsh_pairs(pages, signatures(pages, CFG), CFG)
+    return pairs
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
-    )
-    # include_shingles=False: this query only reads (url, simhash) — the
-    # shingle arrays would otherwise ride the Arrow socket just to be
-    # dropped (non-prunable UDF struct fields); n_shingles carries the
-    # empty-docs-never-near-dup policy filter
-    sig = (
-        with_signatures(pages, CFG, include_shingles=False)
-        .filter(F.col("n_shingles") > 0)
-        .select("url", "simhash")
-    )
-    pairs, _ = candidate_pairs_simhash(sig, CFG)
+    pages = _pair_query_pages(spark, sf_dir)
+    pairs, _ = candidate_pairs_simhash(signatures(pages, CFG), CFG)
     return pairs
 
 
 def q_substr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from camden_spark.plans.caches import warm_cache
-
-    pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
-    )
-    # warm the fingerprint frame exactly like the pipeline's _substr_fp:
-    # candidate_pairs_substr scans it for group sizing AND both self-join
-    # sides, which would otherwise re-run the winnowing UDF per consumer
-    fp = warm_cache(
-        with_fingerprints(pages, CFG).select("url", "fingerprints")
-    )
-    cand, _ = candidate_pairs_substr(fp, CFG)
+    pages = _pair_query_pages(spark, sf_dir)
+    cand, _ = candidate_pairs_substr(fingerprints(pages, CFG), CFG)
     return verify_pairs_substr(cand, pages, CFG)
 
 

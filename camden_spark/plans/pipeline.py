@@ -33,7 +33,6 @@ from camden_spark.operators.substr import (
     verify_pairs_substr,
     with_fingerprints,
 )
-from camden_spark.functions.jvm_sig import with_shingles_jvm, with_signatures_jvm
 from camden_spark.functions.shingles import with_shingles, with_signatures
 from camden_spark.plans.caches import (
     materialize_barrier,
@@ -83,6 +82,64 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
             return -1
         total += max(1, -(-size // mpb))
     return total
+
+
+# ---- candidate-stage builders ------------------------------------------
+# One definition per stage, shared by DedupPipeline.run and the standalone
+# pair queries (entry_queries.q_lsh_pairs / q_simhash_pairs /
+# q_substr_pairs).  ``pages`` carries (url, norm_text).
+
+
+def signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url, minhash, simhash) for every doc with at least one shingle.
+
+    include_shingles=False keeps the shingle arrays (~60% of the UDF's
+    output bytes) off the Arrow wire: struct fields of a UDF result are not
+    Catalyst-prunable, and oversized in-flight bursts arm the socket
+    flow-control stall (session.py).  Zero-shingle docs (empty or
+    whitespace-only after normalization) are excluded from ALL near-dup
+    stages: their sentinel signatures would otherwise band every empty page
+    together.  They stay singletons unless the exact stage clustered them."""
+    return (
+        with_signatures(pages, cfg, include_shingles=False)
+        .filter(F.col("n_shingles") > 0)
+        .select("url", "minhash", "simhash")
+    )
+
+
+def lsh_pairs(
+    pages: DataFrame, sig: DataFrame, cfg: DedupConfig
+) -> tuple[DataFrame, DataFrame]:
+    """Verified MinHash-LSH pairs (url_a, url_b, jaccard), plus
+    candidate_pairs_lsh's 1-row metrics frame.
+
+    The candidate set is a HARD materialization barrier: the pair-url
+    pruning and the verify join both consume it, and without the barrier
+    they race to compute the band-join subtree redundantly (+25% pipeline
+    wall at 500k docs).  localCheckpoint, not cache+count — see
+    materialize_barrier's docstring for the Spark 4.1 cached-AQE-plan
+    re-execution quirk.  Shingle sets are then recomputed for just the
+    candidate-pair urls; they are never materialized corpus-wide (they
+    dominate memory traffic, and a 10^12-doc corpus could not hold them)."""
+    cand, metrics = candidate_pairs_lsh(sig, cfg)
+    cand = materialize_barrier(cand)
+    pair_urls = (
+        cand.select(F.col("url_a").alias("url"))
+        .union(cand.select(F.col("url_b").alias("url")))
+        .distinct()
+    )
+    sh = with_shingles(pages.join(pair_urls, "url", "left_semi"), cfg)
+    return verify_pairs_jaccard(cand, sh, cfg), metrics
+
+
+def fingerprints(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Warm-cached (url, fingerprints) winnowing frame.  Warm, not lazily
+    cached: candidate_pairs_substr scans it for group sizing and on both
+    self-join sides, and cold-cache consumers race to re-run the
+    fingerprint UDF (caches.warm_cache docstring)."""
+    return warm_cache(
+        with_fingerprints(pages, cfg).select("url", "fingerprints")
+    )
 
 
 @dataclass
@@ -223,68 +280,23 @@ class DedupPipeline:
 
         pair_frames = [exact_pairs]
 
-        # signature/shingle backend dispatch (cfg.sig_backend): "jvm" keeps
-        # the whole signature stage inside Catalyst codegen — no python
-        # workers, no JVM<->worker Arrow socket (the measured 2->8 scaling
-        # bottleneck); "arrow" is the vectorized pandas-UDF twin.
-        if cfg.sig_backend == "jvm":
-            def build_sig() -> DataFrame:
-                return with_signatures_jvm(distinct_pages, cfg).select(
-                    "url", "minhash", "simhash"
-                )
-
-            shingle_fn = with_shingles_jvm
-        else:
-            def build_sig() -> DataFrame:
-                return (
-                    with_signatures(distinct_pages, cfg, include_shingles=False)
-                    .filter(F.col("n_shingles") > 0)
-                    .select("url", "minhash", "simhash")
-                )
-
-            shingle_fn = with_shingles
-
-        needs_sig = self.enable_lsh or self.enable_simhash
-        if needs_sig:
-            # cache only the fixed-width signatures; shingle-hash sets are
-            # recomputed later for just the docs that appear in candidate
-            # pairs (never materialized corpus-wide — they dominate memory
-            # traffic and a 10^12-doc corpus could not hold them anyway)
-            # zero-shingle docs (empty/whitespace-only after normalization)
-            # are excluded from ALL near-dup stages: their sentinel signatures
-            # would otherwise band every empty page together (and flip with
-            # corpus size once the mega-band cap kicks in).  They remain
-            # singletons unless the exact stage clustered them byte-identical.
-            # (arrow path: include_shingles=False keeps the shingle arrays —
-            # ~60% of the stage's bytes — off the Arrow wire; oversized
-            # in-flight bursts arm the socket flow-control stall, session.py)
+        if self.enable_lsh or self.enable_simhash:
             # warm, for the same concurrent-branch reason as norm/exact:
             # candidate_pairs_lsh's band-size-count and band-join branches
             # both scan sig, and simhash scans it again
             sig = warm_cache(
-                staged("signatures", build_sig, upstream=["exact"])
+                staged(
+                    "signatures",
+                    lambda: signatures(distinct_pages, cfg),
+                    upstream=["exact"],
+                )
             )
 
         def build_lsh() -> DataFrame:
-            cand, m = candidate_pairs_lsh(sig, cfg)
-            # HARD materialization barrier: three downstream branches
-            # consume the candidate set, and without it they race to
-            # compute the expensive band-join subtree redundantly (+25%
-            # pipeline wall at 500k docs).  localCheckpoint, not
-            # cache+count — see materialize_barrier's docstring for the
-            # Spark 4.1 cached-AQE-plan re-execution quirk.
-            cand = materialize_barrier(cand)
+            pairs, m = lsh_pairs(distinct_pages, sig, cfg)
             if self.collect_metrics:
                 metrics["lsh"] = m.first().asDict()
-            pair_urls = (
-                cand.select(F.col("url_a").alias("url"))
-                .union(cand.select(F.col("url_b").alias("url")))
-                .distinct()
-            )
-            sh = shingle_fn(
-                distinct_pages.join(pair_urls, "url", "left_semi"), cfg
-            )
-            return verify_pairs_jaccard(cand, sh, cfg)
+            return pairs
 
         def _lsh_branch() -> DataFrame:
             lp = staged("lsh_pairs", build_lsh, upstream=["signatures"])
@@ -315,16 +327,7 @@ class DedupPipeline:
                 sp = materialize_barrier(sp)
             return sp
 
-        def _substr_fp() -> DataFrame:
-            # warm: the self-join scans fp on BOTH sides plus the
-            # group-sizing branch — cold-cache branch race otherwise
-            return warm_cache(
-                with_fingerprints(distinct_pages, cfg).select(
-                    "url", "fingerprints"
-                )
-            )
-
-        lsh_pairs = sim_pairs = fp_pre = None
+        lsh_out = sim_out = fp_pre = None
         n_branches = sum(
             (self.enable_lsh, self.enable_simhash, self.enable_substr)
         )
@@ -351,7 +354,7 @@ class DedupPipeline:
                 if self.enable_simhash:
                     futs["simhash"] = pool.submit(_simhash_branch)
                 if self.enable_substr:
-                    futs["fp"] = pool.submit(_substr_fp)
+                    futs["fp"] = pool.submit(fingerprints, distinct_pages, cfg)
                 # retrieve EVERY branch's outcome before raising: a fixed
                 # await order would drop sibling exceptions on a
                 # multi-branch failure and report only one cause
@@ -371,35 +374,37 @@ class DedupPipeline:
                     raise RuntimeError(
                         f"candidate branch(es) failed [{detail}]"
                     ) from first
-                lsh_pairs = results.get("lsh")
-                sim_pairs = results.get("simhash")
+                lsh_out = results.get("lsh")
+                sim_out = results.get("simhash")
                 fp_pre = results.get("fp")
         else:
             if self.enable_lsh:
-                lsh_pairs = _lsh_branch()
+                lsh_out = _lsh_branch()
             if self.enable_simhash:
-                sim_pairs = _simhash_branch()
+                sim_out = _simhash_branch()
             # store path: fp is built inside build_substr so a resumed
             # substr snapshot never computes fingerprints it won't use
 
         if self.enable_lsh:
             pair_frames.append(
-                lsh_pairs.select(
+                lsh_out.select(
                     "url_a", "url_b", F.lit("minhash_lsh").alias("source")
                 )
             )
         if self.enable_simhash:
             pair_frames.append(
-                sim_pairs.select(
+                sim_out.select(
                     "url_a", "url_b", F.lit("simhash").alias("source")
                 )
             )
 
         if self.enable_substr:
             def build_substr() -> DataFrame:
-                # cache: the fingerprint UDF output feeds four consumers
-                # (group sizing + both sides of the self-join)
-                fp = fp_pre if fp_pre is not None else _substr_fp()
+                fp = (
+                    fp_pre
+                    if fp_pre is not None
+                    else fingerprints(distinct_pages, cfg)
+                )
                 cand, m = candidate_pairs_substr(fp, cfg)
                 if self.collect_metrics:
                     metrics["substr"] = m.first().asDict()
@@ -407,7 +412,7 @@ class DedupPipeline:
                 # skip their (expensive) suffix-array verification
                 if self.enable_lsh:
                     cand = cand.join(
-                        lsh_pairs.select("url_a", "url_b"),
+                        lsh_out.select("url_a", "url_b"),
                         ["url_a", "url_b"],
                         "left_anti",
                     )

@@ -94,16 +94,6 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"),
         )
-        # the sig_backend="jvm" signature stage is ONE HashAggregate with 193
-        # output fields (128 MinHash min-slots + 64 SimHash bit sums +
-        # count); the default maxFields=100 silently knocks it out of
-        # whole-stage codegen.  512 restores codegen for wide aggregates
-        # (Spark splits the generated code into sub-64KB methods, so the
-        # ceiling is safe).  Measured effect on that stage is small — its
-        # cost lives in the interpreted-HOF shingle Generate, which no
-        # codegen setting reaches — but interpreted wide aggregates burn
-        # memory bandwidth this box shares across cores, so keep it on.
-        .config("spark.sql.codegen.maxFields", "512")
         # the generated-class cache defaults to 100 entries; one pass over
         # this engine's query suite generates several hundred codegen units,
         # so every repeat run recompiled everything — and Janino compilation

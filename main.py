@@ -38,10 +38,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     # default None → DedupConfig's 0.65 owns the default (one source of
     # truth: CLI runs must cluster identically to entry()/tests)
     p.add_argument("--jaccard-threshold", type=float, default=None)
-    p.add_argument("--sig-backend", default=None, choices=["jvm", "arrow"],
-                   help="signature stage backend: jvm (Catalyst builtins, no "
-                        "python workers) or arrow (vectorized pandas UDF); "
-                        "default = DedupConfig's")
     p.add_argument("--no-lsh", action="store_true")
     p.add_argument("--no-simhash", action="store_true")
     p.add_argument("--no-substr", action="store_true")
@@ -89,8 +85,6 @@ def run(argv: list[str]) -> dict:
     overrides = {}
     if args.jaccard_threshold is not None:
         overrides["jaccard_threshold"] = args.jaccard_threshold
-    if args.sig_backend is not None:
-        overrides["sig_backend"] = args.sig_backend
     cfg = DedupConfig(**overrides)
     pages = load_pages(spark, args.input)
     t0 = time.time()

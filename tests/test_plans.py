@@ -111,19 +111,33 @@ def test_snapshot_manifest_commit_is_the_commit_point(spark, tmp_path):
 
 
 def test_pipeline_resume_identical(spark, pages_df, tmp_path):
+    """The in-memory run (threaded candidate branches), the checkpoint-store
+    run (sequential staged() snapshots) and its resume all build the stages
+    from the same functions: clusters and the (url_a, url_b, source) pair
+    set must agree across the three."""
     cfg = DedupConfig()
-    p = DedupPipeline(cfg=cfg, checkpoint_dir=str(tmp_path))
-    r1 = sorted(map(tuple, p.run(pages_df).clusters.collect()))
-    # second run resumes every stage from snapshot
-    p2 = DedupPipeline(cfg=cfg, checkpoint_dir=str(tmp_path))
-    r2 = sorted(map(tuple, p2.run(pages_df).clusters.collect()))
-    assert r1 == r2
+
+    def run(checkpoint_dir):
+        res = DedupPipeline(cfg=cfg, checkpoint_dir=checkpoint_dir).run(pages_df)
+        clusters = sorted(map(tuple, res.clusters.collect()))
+        pairs = sorted(
+            map(tuple, res.pairs.select("url_a", "url_b", "source").collect())
+        )
+        res.release()
+        return clusters, pairs
+
+    in_memory = run(None)
+    stored = run(str(tmp_path))
+    # second store run resumes every stage from snapshot
+    resumed = run(str(tmp_path))
+    assert in_memory[1], "fixture must produce near-dup pairs"
+    assert in_memory == stored == resumed
     manifest = os.path.join(
         str(tmp_path), cfg.config_hash(), "clusters", "_MANIFEST.json"
     )
     with open(manifest) as f:
         m = json.load(f)
-    assert m["rows"] == len(r1)
+    assert m["rows"] == len(stored[0])
     assert "exact" in m["upstream"]
 
 
@@ -599,21 +613,21 @@ def test_decontaminate_broadcast_gate(spark):
         spark.conf.set(key, old)
 
 
-def test_sig_backend_flips_checkpoint_identity(tmp_path, spark):
-    """cfg.sig_backend feeds config_hash, so flipping backends must NOT
-    resume from the other backend's snapshots: each backend gets its own
-    config-hash directory and recomputes, and the two runs agree on
-    clusters (backend is an execution detail, not a semantic knob)."""
+def test_jaccard_threshold_flips_checkpoint_identity(tmp_path, spark):
+    """Every DedupConfig field feeds config_hash, so changing one (here
+    jaccard_threshold) must NOT resume from the old config's snapshots: the
+    new config gets its own config-hash directory and recomputes."""
     import datetime as _dt
 
     from camden_spark.config import DedupConfig
 
-    assert (
-        DedupConfig(sig_backend="arrow").config_hash()
-        != DedupConfig(sig_backend="jvm").config_hash()
-    )
+    loose, strict = DedupConfig(), DedupConfig(jaccard_threshold=0.9)
+    assert loose.config_hash() != strict.config_hash()
 
     ts = _dt.datetime(2025, 1, 1)
+    # docs 0-2 differ by one trailing token (7 shingles each, pairwise
+    # Jaccard 0.75); docs 3-5 are byte-identical (exact stage) and share
+    # 6 of doc 0-2's shingles (Jaccard 0.86)
     rows = [
         (f"https://e.x/{i}", ts, None,
          ("alpha beta gamma delta epsilon zeta " * 8) + (str(i) if i < 3 else ""),
@@ -624,24 +638,25 @@ def test_sig_backend_flips_checkpoint_identity(tmp_path, spark):
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
 
-    def run(backend):
-        p = DedupPipeline(
-            cfg=DedupConfig(sig_backend=backend),
-            checkpoint_dir=str(tmp_path),
-        )
-        res = p.run(df)
-        out = sorted((r["url"], r["cluster_id"]) for r in res.clusters.collect())
+    def run(cfg):
+        res = DedupPipeline(cfg=cfg, checkpoint_dir=str(tmp_path)).run(df)
+        res.clusters.collect()
         res.release()
-        return out, p.cfg.config_hash()
+        with open(
+            os.path.join(tmp_path, cfg.config_hash(), "lsh_pairs", "_MANIFEST.json")
+        ) as f:
+            return json.load(f)["rows"]
 
-    out_arrow, hash_arrow = run("arrow")
-    dirs_after_arrow = set(os.listdir(tmp_path))
-    assert hash_arrow in dirs_after_arrow
-    out_jvm, hash_jvm = run("jvm")
-    # a fresh config-hash directory appeared: the jvm run recomputed rather
-    # than reusing stale arrow-keyed signature snapshots
-    assert hash_jvm in set(os.listdir(tmp_path)) - dirs_after_arrow
-    assert out_arrow == out_jvm
+    lsh_loose = run(loose)
+    dirs_after_loose = set(os.listdir(tmp_path))
+    assert loose.config_hash() in dirs_after_loose
+    lsh_strict = run(strict)
+    # a fresh config-hash directory appeared, and its LSH stage was
+    # recomputed under the new threshold rather than resumed from the
+    # loose config's snapshot
+    assert strict.config_hash() in set(os.listdir(tmp_path)) - dirs_after_loose
+    assert lsh_loose > 0
+    assert lsh_strict == 0
 
 
 def test_pin_executor_fleet_noop_on_local_master(spark):
