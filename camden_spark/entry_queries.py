@@ -1028,9 +1028,9 @@ SQL_MINHASH_SIGNATURES_BOUNDED = _minhash_bounded_oracle_sql()
 def q_lsh_pairs_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 driver-HASH-verified on a bounded slice (doc_id < _BOUNDED_SLICE): the REAL
     ``candidate_pairs_lsh`` operator (band hash → group-size count →
-    mega-band drop → semi-prune → keyed repartition → self-equi-join,
-    operators/lsh.py:44) run over the SQL-statable signatures of
-    ``_bounded_sig16``, banded 4x4.  The operator's xxhash64 band keys
+    mega-band drop → semi-prune → keyed repartition → self-equi-join, the
+    last five in operators/lsh.py:capped_bucket_self_join) run over the
+    SQL-statable signatures of ``_bounded_sig16``, banded 4x4.  The operator's xxhash64 band keys
     induce exactly the grouping of the raw 4-row signature tuples they hash
     (collision probability 2^-64 per band pair), so DuckDB restates banding
     as a self-join on the tuple itself.  The mega-band cap cannot fire here
@@ -1090,7 +1090,7 @@ SQL_LSH_PAIRS_BOUNDED = _lsh_bounded_oracle_sql()
 
 #: slice / cap for the capped twin: at doc_id < 500 the sf0.01 corpus forms
 #: LSH band groups of size 3 (and sf0.001 forms several), so max_band_group=2
-#: actually FIRES — the drop branch of operators/lsh.py:candidate_pairs_lsh
+#: actually FIRES — the drop branch of operators/lsh.py:capped_bucket_self_join
 #: does real work and removing the cap changes the answer (measured: 25 → 22
 #: pairs at sf0.01, 27 → 18 at sf0.001).
 _CAPPED_SLICE = 500
@@ -1207,8 +1207,9 @@ _SIMHASH32_BIT_TERMS_SQL = "\n         + ".join(
 
 def q_simhash_pairs_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 driver-HASH-verified on a bounded slice (doc_id < _BOUNDED_SLICE): the REAL
-    ``candidate_pairs_simhash`` operator (pigeonhole block join + builtin
-    bit_count(xor) verify, operators/simhash.py:38) run over the
+    ``candidate_pairs_simhash`` operator (pigeonhole block join through
+    operators/lsh.py:capped_bucket_self_join + builtin bit_count(xor)
+    verify) run over the
     SQL-statable 32-bit SimHash of ``_bounded_simhash32``.  cfg is the
     production config with simhash_bits=32 (4 blocks of 8 bits, radius 3
     unchanged); the mega-group cap cannot fire (199 docs <
@@ -1272,8 +1273,9 @@ def q_substr_pairs_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 (candidate stage) driver-HASH-verified on a bounded slice
     (doc_id < _BOUNDED_SLICE): the REAL ``candidate_pairs_substr`` operator
     (fingerprint explode → group-size count → mega-group drop → semi-prune →
-    keyed repartition → self-equi-join, operators/substr.py:58) run over
-    SQL-statable winnow fingerprints.
+    keyed repartition → self-equi-join, the last five in
+    operators/lsh.py:capped_bucket_self_join) run over SQL-statable winnow
+    fingerprints.
 
     Kernel swap, same shape as the MinHash twin: the production rolling hash
     (uint64 FNV polynomial, functions/substr.py:25 — wraparound DuckDB cannot

@@ -29,6 +29,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import LongType
 
+from camden_spark.operators.lsh import capped_bucket_self_join, join_partitions
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -422,41 +424,23 @@ def ivf_near_dup_pairs(
         F.col(id_col),
         F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    # cell sizing via one map-side-combined aggregation (the previous window
-    # count rode a full-payload sort per side); membership in keep-cells is
-    # a tiny broadcastable join
-    sizes = assign.groupBy("cell").agg(F.count("*").alias("n"))
+    # cell sizing, the oversize-cell drop and the cell-keyed repartition are
+    # the shared capped self-join (operators/lsh.py)
+    joined, drops = capped_bucket_self_join(
+        assign, ["cell"], id_col, max_cell, "cells"
+    )
     if status is not None:
-        drops = sizes.agg(
-            F.count("*").cast("long").alias("cells_total"),
-            F.sum((F.col("n") > max_cell).cast("long")).alias("cells_dropped"),
-            F.sum(
-                F.when(F.col("n") > max_cell, F.col("n")).otherwise(0)
-            ).cast("long").alias("rows_in_dropped_cells"),
-        ).first()
-        status.update(drops.asDict())
-    keep = sizes.filter((F.col("n") > 1) & (F.col("n") <= max_cell)).select(
-        "cell"
-    )
-    # explicit cell-keyed repartition before the self-join (the lsh.py band
-    # pattern): the (id, cell) rows are tiny in BYTES but the join emits
-    # O(cell²) candidate rows, so AQE's byte-based coalescing would run it
-    # on 1-2 tasks (measured: a 2-task 4.7 s stage at sf0.1); both sides
-    # share the exchange via ReusedExchange
-    n_parts = vectors.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = assign.join(keep, "cell", "left_semi").repartition(
-        n_parts, "cell"
-    )
-    a = joinable.select(F.col(id_col).alias("id_a"), "cell")
-    b = joinable.select(F.col(id_col).alias("id_b"), "cell")
+        status.update(drops.first().asDict())
     cand = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # pair-keyed repartition for the same reason: the dedup aggregation
-        # and the downstream O(dim)-per-pair verify are CPU-bound on rows
-        # whose shuffle bytes (16 B/pair) read as "1 partition" to AQE;
-        # the dedup agg reuses this exchange (no extra shuffle)
-        .repartition(n_parts, "id_a", "id_b")
+        joined.select(
+            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+        )
+        # pair-keyed repartition for the same reason as the cell-keyed one:
+        # the dedup aggregation and the downstream O(dim)-per-pair verify
+        # are CPU-bound on rows whose shuffle bytes (16 B/pair) read as "1
+        # partition" to AQE; the dedup agg reuses this exchange (no extra
+        # shuffle)
+        .repartition(join_partitions(vectors), "id_a", "id_b")
         # dedupe BEFORE the exact verify: multi-probe assigns a pair to up
         # to n_probe shared cells — on id pairs only, never payloads
         .dropDuplicates(["id_a", "id_b"])
@@ -509,24 +493,14 @@ def ann_near_dup_pairs(
     thresholds / large candidate volumes use ivf_near_dup_pairs, whose
     payload-free candidate machinery IS the measured win."""
     bn = _with_norm(vectors, id_col, vec_col)
-    b = hyperplane_buckets(bn, dim, n_planes, n_tables, seed, vec_col)
-    sized = b.groupBy("table", "bucket").agg(F.count("*").alias("n"))
-    keep = sized.filter((F.col("n") > 1) & (F.col("n") <= max_bucket)).select(
-        "table", "bucket"
-    )
-    joinable = b.join(keep, ["table", "bucket"], "left_semi").select(
+    b = hyperplane_buckets(bn, dim, n_planes, n_tables, seed, vec_col).select(
         id_col, vec_col, "_nrm", "table", "bucket"
     )
-    l, r = joinable.alias("l"), joinable.alias("r")
+    joined, _drops = capped_bucket_self_join(
+        b, ["table", "bucket"], id_col, max_bucket, "buckets"
+    )
     pairs = (
-        l.join(
-            r,
-            on=[
-                F.col("l.table") == F.col("r.table"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
+        joined
         .select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),

@@ -1,4 +1,5 @@
-"""LSH banding over MinHash signatures → verified candidate pairs.
+"""LSH banding over MinHash signatures → verified candidate pairs, and the
+capped bucket self-join every candidate generator shares.
 
 Spark-first layout (north rule F3): the signature array is split into b bands
 of r rows; each band is hashed JVM-side (``xxhash64`` over the slice — a
@@ -7,12 +8,14 @@ to ``(url, band, band_hash)`` rows, and candidates come from a self-equi-join
 on ``(band, band_hash)``.
 
 Skew story (explicit, per the north rule): boilerplate-heavy corpora produce
-mega-bands — a single band key shared by thousands of pages — which would turn
-the self-join into an O(group²) hot task.  We therefore (1) count band-group
-sizes with one aggregation, (2) DROP groups larger than ``cfg.max_band_group``
-(surfaced in the returned metrics, never silent — recall accounting includes
-them), (3) repartition on the band key before the join, and (4) leave AQE
-skew-join splitting on as the second line of defense.
+mega-buckets — a single band key shared by thousands of pages — which would
+turn the self-join into an O(group²) hot task.  :func:`capped_bucket_self_join`
+therefore (1) counts bucket sizes with one aggregation, (2) DROPS buckets
+larger than the caller's cap (surfaced in the returned metrics, never silent —
+recall accounting includes them), (3) repartitions on the bucket key before
+the join, and (4) leaves AQE skew-join splitting on as the second line of
+defense.  The SimHash block join, the substring fingerprint join and both
+embedding near-dup joins (operators/ann.py) run through the same function.
 """
 
 from __future__ import annotations
@@ -42,11 +45,65 @@ def band_hashes(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
     return sig.select("url", F.posexplode(bands).alias("band", "band_hash"))
 
 
+def join_partitions(df: DataFrame, configured: int = 0) -> int:
+    """Partition count of the keyed exchanges ahead of the candidate and
+    verify joins: ``configured`` (``cfg.band_partitions``), or 2x the
+    session's defaultParallelism when it is 0."""
+    return configured or df.sparkSession.sparkContext.defaultParallelism * 2
+
+
+def capped_bucket_self_join(
+    rows: DataFrame,
+    keys: list[str],
+    id_col: str,
+    cap: int,
+    unit: str,
+    partitions: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """Self-join ``rows`` within buckets of equal ``keys``, dropping buckets
+    of more than ``cap`` rows (module docstring: skew story).
+
+    Returns the joined frame — sides aliased ``l`` and ``r``, each carrying
+    every column of ``rows``, one row per ``l.<id_col> < r.<id_col>`` pair
+    per shared bucket — plus a 1-row metrics frame ``(<unit>_total,
+    <unit>_dropped, rows_in_dropped_<unit>)``.  Callers select, filter and
+    dedupe the joined pairs themselves.  ``partitions``: see
+    :func:`join_partitions`.
+    """
+    # one aggregation computes bucket sizes; buckets of 1 can't produce
+    # pairs, buckets above the cap are dropped (boilerplate skew)
+    sized = track_cache(
+        rows.groupBy(*keys).agg(F.count("*").alias("bucket_size"))
+    )  # tiny (one row per distinct bucket); metrics + keep reuse it
+    oversize = F.col("bucket_size") > cap
+    metrics = sized.agg(
+        F.count("*").cast("long").alias(f"{unit}_total"),
+        F.sum(oversize.cast("long")).alias(f"{unit}_dropped"),
+        F.sum(F.when(oversize, F.col("bucket_size")).otherwise(0))
+        .cast("long")
+        .alias(f"rows_in_dropped_{unit}"),
+    )
+    keep = sized.filter((F.col("bucket_size") > 1) & ~oversize).select(*keys)
+
+    # semi-join prunes the rows to joinable buckets, then the self-equi-join
+    # runs on an explicit bucket-key repartition: the rows are small in
+    # BYTES but the join emits O(bucket²) pairs, so AQE's byte-based
+    # coalescing would run it on 1-2 tasks; both sides share the exchange
+    # via ReusedExchange
+    joinable = rows.join(keep, keys, "left_semi").repartition(
+        join_partitions(rows, partitions), *keys
+    )
+    left, right = joinable.alias("l"), joinable.alias("r")
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return left.join(right, on=on), metrics
+
+
 def candidate_pairs_lsh(
     sig: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (url_a < url_b), plus a 1-row metrics DataFrame
-    (bands_total, bands_dropped, docs_in_dropped_bands).
+    (bands_total, bands_dropped, rows_in_dropped_bands).
 
     ``sig`` must carry ``url`` and ``minhash``.
     """
@@ -57,53 +114,17 @@ def candidate_pairs_lsh(
     from camden_spark.functions.hashing import EMPTY_SIG_SLOT
 
     sig = sig.filter(F.col("minhash")[0] != F.lit(EMPTY_SIG_SLOT))
-    bands = band_hashes(sig, cfg)
-
-    # one aggregation computes group sizes; groups of 1 can't produce pairs,
-    # groups above the cap are dropped mega-bands (boilerplate skew).
-    sized = track_cache(
-        bands.groupBy("band", "band_hash").agg(
-            F.count("*").alias("band_group_size")
-        )
-    )  # tiny (one row per distinct band key); metrics + keep reuse it
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("bands_total"),
-        F.sum(
-            (F.col("band_group_size") > cfg.max_band_group).cast("long")
-        ).alias("bands_dropped"),
-        F.sum(
-            F.when(
-                F.col("band_group_size") > cfg.max_band_group,
-                F.col("band_group_size"),
-            ).otherwise(0)
-        ).cast("long").alias("docs_in_dropped_bands"),
+    joined, metrics = capped_bucket_self_join(
+        band_hashes(sig, cfg),
+        ["band", "band_hash"],
+        "url",
+        cfg.max_band_group,
+        "bands",
+        cfg.band_partitions,
     )
-    keep = sized.filter(
-        (F.col("band_group_size") > 1)
-        & (F.col("band_group_size") <= cfg.max_band_group)
-    ).select("band", "band_hash")
-
-    # semi-join prunes the exploded relation to joinable bands, then the
-    # self-equi-join runs on an explicit band-key repartition sized to the
-    # session's parallelism (cfg.band_partitions=0 → 2x defaultParallelism)
-    n_parts = cfg.band_partitions or sig.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = bands.join(keep, ["band", "band_hash"], "left_semi").repartition(
-        n_parts, "band", "band_hash"
-    )
-    left = joinable.alias("l")
-    right = joinable.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b"))
-        .dropDuplicates(["url_a", "url_b"])
-    )
+    pairs = joined.select(
+        F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")
+    ).dropDuplicates(["url_a", "url_b"])
     return pairs, metrics
 
 

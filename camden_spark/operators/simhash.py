@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from camden_spark.config import DedupConfig
-from camden_spark.plans.caches import track_cache
+from camden_spark.operators.lsh import capped_bucket_self_join
 
 
 def simhash_blocks(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -40,41 +40,19 @@ def candidate_pairs_simhash(
     sig: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Verified Hamming-ball pairs (url_a, url_b, hamming ≤ radius) plus a
-    1-row metrics DataFrame (blocks_total, blocks_dropped)."""
+    1-row metrics DataFrame (blocks_total, blocks_dropped,
+    rows_in_dropped_blocks)."""
     cfg = cfg or DedupConfig()
-    blocks = simhash_blocks(sig, cfg)
-
-    sized = track_cache(
-        blocks.groupBy("block", "block_val").agg(
-            F.count("*").alias("group_size")
-        )
-    )  # tiny; metrics + keep reuse it
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("blocks_total"),
-        F.sum((F.col("group_size") > cfg.max_simhash_group).cast("long")).alias(
-            "blocks_dropped"
-        ),
+    joined, metrics = capped_bucket_self_join(
+        simhash_blocks(sig, cfg),
+        ["block", "block_val"],
+        "url",
+        cfg.max_simhash_group,
+        "blocks",
+        cfg.band_partitions,
     )
-    keep = sized.filter(
-        (F.col("group_size") > 1) & (F.col("group_size") <= cfg.max_simhash_group)
-    ).select("block", "block_val")
-
-    n_parts = cfg.band_partitions or sig.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = blocks.join(keep, ["block", "block_val"], "left_semi").repartition(
-        n_parts, "block", "block_val"
-    )
-    left = joinable.alias("l")
-    right = joinable.alias("r")
     pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.block") == F.col("r.block"),
-                F.col("l.block_val") == F.col("r.block_val"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(
+        joined.select(
             F.col("l.url").alias("url_a"),
             F.col("r.url").alias("url_b"),
             F.bit_count(

@@ -5,7 +5,7 @@ Stage layout:
 1. **Fingerprint** — vectorized pandas UDF adds a ``fingerprints`` column of
    winnowed rolling-hash values (functions/substr.py).  Arrow batches only.
 2. **Candidate join** — explode fingerprints, equi-self-join on the value
-   (same mega-group capping + explicit repartition as the LSH band join).
+   (operators/lsh.py:capped_bucket_self_join, shared with the LSH band join).
 3. **Verify** — ``applyInPandas`` over candidate pairs computes the TRUE
    longest common substring with the suffix-array + Kasai LCP kernel; pairs
    with overlap ≥ cfg.min_overlap_chars survive.  Runs ONLY on candidate
@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from camden_spark.config import DedupConfig
+from camden_spark.operators.lsh import capped_bucket_self_join, join_partitions
 from camden_spark.plans.caches import track_cache
 from camden_spark.functions.substr import (
     batch_winnow,
@@ -58,36 +59,21 @@ def with_fingerprints(
 def candidate_pairs_substr(
     fp: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Fingerprint-equality candidate pairs (url_a < url_b) + metrics row."""
+    """Fingerprint-equality candidate pairs (url_a < url_b) plus a 1-row
+    metrics DataFrame (fingerprints_total, fingerprints_dropped,
+    rows_in_dropped_fingerprints)."""
     cfg = cfg or DedupConfig()
-    exploded = fp.select("url", F.explode("fingerprints").alias("fp"))
-    sized = track_cache(
-        exploded.groupBy("fp").agg(F.count("*").alias("group_size"))
+    joined, metrics = capped_bucket_self_join(
+        fp.select("url", F.explode("fingerprints").alias("fp")),
+        ["fp"],
+        "url",
+        cfg.max_fingerprint_group,
+        "fingerprints",
+        cfg.band_partitions,
     )
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("fingerprints_total"),
-        F.sum(
-            (F.col("group_size") > cfg.max_fingerprint_group).cast("long")
-        ).alias("fingerprints_dropped"),
-    )
-    keep = sized.filter(
-        (F.col("group_size") > 1)
-        & (F.col("group_size") <= cfg.max_fingerprint_group)
-    ).select("fp")
-    n_parts = cfg.band_partitions or fp.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = exploded.join(keep, "fp", "left_semi").repartition(n_parts, "fp")
-    left, right = joinable.alias("l"), joinable.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.fp") == F.col("r.fp"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b"))
-        .dropDuplicates(["url_a", "url_b"])
-    )
+    pairs = joined.select(
+        F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")
+    ).dropDuplicates(["url_a", "url_b"])
     return pairs, metrics
 
 
@@ -126,9 +112,8 @@ def verify_pairs_substr(
     )
     a = texts.select(F.col("url").alias("url_a"), F.col("_t").alias("text_a"))
     b = texts.select(F.col("url").alias("url_b"), F.col("_t").alias("text_b"))
-    n_parts = cfg.band_partitions or pages.sparkSession.sparkContext.defaultParallelism * 2
     joined = pairs.join(a, "url_a").join(b, "url_b").repartition(
-        n_parts, "url_a", "url_b"
+        join_partitions(pages, cfg.band_partitions), "url_a", "url_b"
     )
     min_overlap = cfg.min_overlap_chars
     min_frac = cfg.min_overlap_frac

@@ -63,14 +63,38 @@ def warm_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """ids of every RDD currently holding storage blocks (JVM-side map)."""
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
+def persistent_rdd_ids(spark) -> set:
+    """ids of every RDD currently holding storage blocks (the JVM-side map
+    behind the Storage UI tab)."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
     out = set()
     while it.hasNext():
-        out.add(it.next()._1())
+        out.add(it.next())
     return out
+
+
+def release_blocks_since(spark, before: set) -> None:
+    """Register the storage of every RDD persisted since ``before`` (a
+    :func:`persistent_rdd_ids` snapshot) for the next
+    :func:`release_caches`: checkpointed RDD blocks, which
+    ``DataFrame.unpersist`` cannot reach."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    created = []
+    while it.hasNext():
+        t = it.next()
+        if t._1() not in before:
+            created.append(t._2())
+    if not created:
+        return
+
+    def _free(blocking: bool) -> None:
+        for rdd in created:
+            try:
+                rdd.unpersist(blocking)
+            except Exception:
+                pass
+
+    track_release(_free)
 
 
 def materialize_barrier(df: DataFrame) -> DataFrame:
@@ -98,25 +122,9 @@ def materialize_barrier(df: DataFrame) -> DataFrame:
     (candidate/verified pair sets).
     """
     spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=True)
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    created = []
-    while it.hasNext():
-        t = it.next()
-        if t._1() not in before:
-            created.append(t._2())
-    if created:
-
-        def _free(blocking: bool) -> None:
-            for rdd in created:
-                try:
-                    rdd.unpersist(blocking)
-                except Exception:
-                    pass
-
-        track_release(_free)
+    release_blocks_since(spark, before)
     return out
 
 

@@ -168,10 +168,6 @@ class PipelineResult:
 class DedupPipeline:
     cfg: DedupConfig = field(default_factory=DedupConfig)
     checkpoint_dir: str | None = None
-    #: toggles, mostly for tests / staged benchmarking
-    enable_lsh: bool = True
-    enable_simhash: bool = True
-    enable_substr: bool = True
     #: eagerly collect per-stage skew metrics (one extra tiny action per
     #: stage); disable in latency-sensitive benchmark runs
     collect_metrics: bool = True
@@ -278,19 +274,16 @@ class DedupPipeline:
             exact.filter(F.col("is_canonical")).select("url"), "url", "left_semi"
         )
 
-        pair_frames = [exact_pairs]
-
-        if self.enable_lsh or self.enable_simhash:
-            # warm, for the same concurrent-branch reason as norm/exact:
-            # candidate_pairs_lsh's band-size-count and band-join branches
-            # both scan sig, and simhash scans it again
-            sig = warm_cache(
-                staged(
-                    "signatures",
-                    lambda: signatures(distinct_pages, cfg),
-                    upstream=["exact"],
-                )
+        # warm, for the same concurrent-branch reason as norm/exact:
+        # candidate_pairs_lsh's band-size-count and band-join branches both
+        # scan sig, and simhash scans it again
+        sig = warm_cache(
+            staged(
+                "signatures",
+                lambda: signatures(distinct_pages, cfg),
+                upstream=["exact"],
             )
+        )
 
         def build_lsh() -> DataFrame:
             pairs, m = lsh_pairs(distinct_pages, sig, cfg)
@@ -300,7 +293,7 @@ class DedupPipeline:
 
         def _lsh_branch() -> DataFrame:
             lp = staged("lsh_pairs", build_lsh, upstream=["signatures"])
-            if self.enable_substr and store is None:
+            if store is None:
                 # The verified LSH pair set feeds TWO consumers (the pair
                 # union AND substr's anti-join); without a barrier both
                 # subtrees compute the Jaccard-verify join (re-shingle +
@@ -327,11 +320,8 @@ class DedupPipeline:
                 sp = materialize_barrier(sp)
             return sp
 
-        lsh_out = sim_out = fp_pre = None
-        n_branches = sum(
-            (self.enable_lsh, self.enable_simhash, self.enable_substr)
-        )
-        if store is None and n_branches > 1:
+        fp_pre = None
+        if store is None:
             # Overlap the independent candidate branches from driver
             # threads: each branch's actions leave executors idle during
             # its own driver/AQE planning gaps (~20 s per pipeline run,
@@ -344,17 +334,20 @@ class DedupPipeline:
             # RDD ids between branches; harmless — release callbacks fire
             # in bulk and unpersist is idempotent.  The checkpoint-store
             # path stays sequential: staged() snapshot commits define
-            # resume lineage order.
+            # resume lineage order.  Branch targets inherit this thread's
+            # local properties (job group, description), so profiling tools
+            # attribute branch jobs to the caller's query.
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            inherit = inheritable_thread_target(spark)
             with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = {}
-                if self.enable_lsh:
-                    futs["lsh"] = pool.submit(_lsh_branch)
-                if self.enable_simhash:
-                    futs["simhash"] = pool.submit(_simhash_branch)
-                if self.enable_substr:
-                    futs["fp"] = pool.submit(fingerprints, distinct_pages, cfg)
+                futs = {
+                    "lsh": pool.submit(inherit(_lsh_branch)),
+                    "simhash": pool.submit(inherit(_simhash_branch)),
+                    "fp": pool.submit(inherit(fingerprints), distinct_pages, cfg),
+                }
                 # retrieve EVERY branch's outcome before raising: a fixed
                 # await order would drop sibling exceptions on a
                 # multi-branch failure and report only one cause
@@ -374,63 +367,40 @@ class DedupPipeline:
                     raise RuntimeError(
                         f"candidate branch(es) failed [{detail}]"
                     ) from first
-                lsh_out = results.get("lsh")
-                sim_out = results.get("simhash")
-                fp_pre = results.get("fp")
+                lsh_out = results["lsh"]
+                sim_out = results["simhash"]
+                fp_pre = results["fp"]
         else:
-            if self.enable_lsh:
-                lsh_out = _lsh_branch()
-            if self.enable_simhash:
-                sim_out = _simhash_branch()
+            lsh_out = _lsh_branch()
+            sim_out = _simhash_branch()
             # store path: fp is built inside build_substr so a resumed
             # substr snapshot never computes fingerprints it won't use
 
-        if self.enable_lsh:
-            pair_frames.append(
-                lsh_out.select(
-                    "url_a", "url_b", F.lit("minhash_lsh").alias("source")
-                )
+        def build_substr() -> DataFrame:
+            fp = fp_pre if fp_pre is not None else fingerprints(distinct_pages, cfg)
+            cand, m = candidate_pairs_substr(fp, cfg)
+            if self.collect_metrics:
+                metrics["substr"] = m.first().asDict()
+            # pairs already confirmed by LSH join the same CC component —
+            # skip their (expensive) suffix-array verification
+            cand = cand.join(
+                lsh_out.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
             )
-        if self.enable_simhash:
-            pair_frames.append(
-                sim_out.select(
-                    "url_a", "url_b", F.lit("simhash").alias("source")
-                )
-            )
+            return verify_pairs_substr(cand, distinct_pages, cfg)
 
-        if self.enable_substr:
-            def build_substr() -> DataFrame:
-                fp = (
-                    fp_pre
-                    if fp_pre is not None
-                    else fingerprints(distinct_pages, cfg)
-                )
-                cand, m = candidate_pairs_substr(fp, cfg)
-                if self.collect_metrics:
-                    metrics["substr"] = m.first().asDict()
-                # pairs already confirmed by LSH join the same CC component —
-                # skip their (expensive) suffix-array verification
-                if self.enable_lsh:
-                    cand = cand.join(
-                        lsh_out.select("url_a", "url_b"),
-                        ["url_a", "url_b"],
-                        "left_anti",
-                    )
-                return verify_pairs_substr(cand, distinct_pages, cfg)
-            sub_pairs = staged(
-                "substr_pairs", build_substr, upstream=["exact"]
-            )
-            pair_frames.append(
-                sub_pairs.select(
-                    "url_a", "url_b", F.lit("substr").alias("source")
-                )
-            )
+        sub_pairs = staged("substr_pairs", build_substr, upstream=["exact"])
 
         # ---- union (F8) + connected components (F6) --------------------
         counters = StageCounters()
-        all_pairs = pair_frames[0]
-        for pf in pair_frames[1:]:
-            all_pairs = all_pairs.unionByName(pf)
+        all_pairs = exact_pairs
+        for pf, source in (
+            (lsh_out, "minhash_lsh"),
+            (sim_out, "simhash"),
+            (sub_pairs, "substr"),
+        ):
+            all_pairs = all_pairs.unionByName(
+                pf.select("url_a", "url_b", F.lit(source).alias("source"))
+            )
         # materialize the final pair set ONCE: CC consumes it through its
         # edge truncation and callers force PipelineResult.pairs afterwards —
         # with a plain cache() both re-ran every verify stage per action

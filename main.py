@@ -38,9 +38,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     # default None → DedupConfig's 0.65 owns the default (one source of
     # truth: CLI runs must cluster identically to entry()/tests)
     p.add_argument("--jaccard-threshold", type=float, default=None)
-    p.add_argument("--no-lsh", action="store_true")
-    p.add_argument("--no-simhash", action="store_true")
-    p.add_argument("--no-substr", action="store_true")
     p.add_argument("--write-split", action="store_true",
                    help="also write canonical/duplicates tables (A6 analog)")
     p.add_argument("--report", action="store_true",
@@ -92,9 +89,6 @@ def run(argv: list[str]) -> dict:
         cfg=cfg,
         checkpoint_dir=args.checkpoint_dir,
         checkpoint_commit_mode=args.commit_mode,
-        enable_lsh=not args.no_lsh,
-        enable_simhash=not args.no_simhash,
-        enable_substr=not args.no_substr,
         collect_metrics=not args.skip_metrics,
     )
     result = pipeline.run(pages)

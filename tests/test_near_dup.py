@@ -92,6 +92,56 @@ def test_substr_finds_containment_pairs(spark, pages_df, corpus):
         assert p in truth
 
 
+#: per pass: (operator, cap field, metric unit, input frame from one
+#: signature value per doc — equal values share every bucket)
+_CAPPED_PASSES = {
+    "lsh": (
+        candidate_pairs_lsh,
+        "max_band_group",
+        "bands",
+        lambda spark, docs: spark.createDataFrame(
+            [(u, [v] * CFG.minhash_perms) for u, v in docs],
+            "url string, minhash array<long>",
+        ),
+    ),
+    "simhash": (
+        candidate_pairs_simhash,
+        "max_simhash_group",
+        "blocks",
+        lambda spark, docs: spark.createDataFrame(
+            [(u, v * 0x0001000100010001) for u, v in docs],
+            "url string, simhash long",
+        ),
+    ),
+    "substr": (
+        candidate_pairs_substr,
+        "max_fingerprint_group",
+        "fingerprints",
+        lambda spark, docs: spark.createDataFrame(
+            [(u, [v]) for u, v in docs], "url string, fingerprints array<long>"
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_CAPPED_PASSES))
+def test_bucket_cap_fires(spark, stage):
+    """A bucket above the cap is dropped, counted, and emits no pair; a
+    bucket within the cap still pairs."""
+    from dataclasses import replace
+
+    op, cap_field, unit, frame = _CAPPED_PASSES[stage]
+    planted = [f"big/{i}" for i in range(5)]
+    control = ["small/0", "small/1"]
+    docs = [(u, 11) for u in planted] + [(u, 22) for u in control]
+    pairs, metrics = op(frame(spark, docs), replace(CFG, **{cap_field: 3}))
+    found = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
+    m = metrics.first()
+    assert m[f"{unit}_dropped"] >= 1
+    assert m[f"rows_in_dropped_{unit}"] >= len(planted)
+    assert found == {tuple(control)}
+
+
 def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["url_a", "url_b"]

@@ -143,9 +143,7 @@ def test_pipeline_resume_identical(spark, pages_df, tmp_path):
 
 def test_sinks(spark, pages_df, tmp_path):
     cfg = DedupConfig()
-    clusters = DedupPipeline(cfg=cfg, enable_simhash=False, enable_substr=False).run(
-        pages_df
-    ).clusters
+    clusters = DedupPipeline(cfg=cfg).run(pages_df).clusters
     rep = cluster_report(clusters)
     assert rep.filter(F.col("n") <= 1).count() == 0
     write_clusters_json(clusters, str(tmp_path / "json"))
@@ -154,6 +152,25 @@ def test_sinks(spark, pages_df, tmp_path):
     stats = write_dedup_split(pages_df, clusters, str(tmp_path / "split"))
     assert stats["canonical"] + stats["moved"] == pages_df.count()
     assert stats["moved"] == clusters.filter(~F.col("is_canonical")).count()
+
+
+def test_pipeline_branch_jobs_inherit_job_group(spark, pages_df):
+    """The threaded candidate branches run their jobs under the caller's job
+    group: no job of an in-memory pipeline run is left unlabeled."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    unlabeled_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("branch_label_test", "branch_label_test")
+    try:
+        res = DedupPipeline(cfg=DedupConfig()).run(pages_df)
+        assert res.pairs.count() > 0
+        res.clusters.count()
+        res.release()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup("branch_label_test"))
+    assert set(tracker.getJobIdsForGroup(None)) - unlabeled_before == set()
 
 
 def test_streaming_exact_dedup(spark, tmp_path):

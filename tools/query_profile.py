@@ -68,74 +68,39 @@ def main() -> None:
     spark.stop()
 
     # ---- parse the event log --------------------------------------------
-    files = []
-    for root, _dirs, fnames in os.walk(EVDIR):
-        for f in fnames:
-            if f.startswith("events_") or f.startswith("local-"):
-                files.append(os.path.join(root, f))
-    # rolling v2 logs split one app across events_N files — read them all,
-    # in sequence, for the most recent app directory
-    latest_dir = max((os.path.dirname(f) for f in files), key=os.path.getmtime)
-    files = sorted(
-        (f for f in files if os.path.dirname(f) == latest_dir),
-        key=lambda f: int(os.path.basename(f).split("_")[1])
-        if os.path.basename(f).startswith("events_")
-        else 0,
-    )
+    from tools.scaling_decompose import load_events
+
     jobs: dict[int, dict] = {}  # job id -> {q, start, end, stages:set}
     stage_job: dict[int, int] = {}
     stage_info: dict[int, dict] = {}
     task_time: dict[int, float] = {}
-    import io
-    import subprocess
-
-    def open_ev(path):
-        if path.endswith(".zstd"):
-            p = subprocess.run(
-                ["zstd", "-dc", path], capture_output=True, check=True
+    for ev in load_events(EVDIR):
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            desc = (ev.get("Properties") or {}).get("spark.job.description", "")
+            jid = ev["Job ID"]
+            jobs[jid] = {
+                "q": desc[3:] if desc.startswith("qp:") else None,
+                "start": ev["Submission Time"],
+                "end": None,
+            }
+            for sid in ev.get("Stage IDs", []):
+                stage_job[sid] = jid
+        elif e == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            sub, comp = si.get("Submission Time"), si.get("Completion Time")
+            if sub and comp:
+                stage_info[sid] = {"wall": (comp - sub) / 1e3}
+        elif e == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            tm = ev.get("Task Metrics") or {}
+            task_time[sid] = task_time.get(sid, 0.0) + (
+                tm.get("Executor Run Time", 0) / 1e3
             )
-            return io.StringIO(p.stdout.decode())
-        return open(path)
-
-    def iter_events():
-        for path in files:
-            with open_ev(path) as fh:
-                for line in fh:
-                    try:
-                        yield json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-
-    if True:
-        for ev in iter_events():
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                desc = (ev.get("Properties") or {}).get(
-                    "spark.job.description", ""
-                )
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "q": desc[3:] if desc.startswith("qp:") else None,
-                    "start": ev["Submission Time"],
-                    "end": None,
-                }
-                for sid in ev.get("Stage IDs", []):
-                    stage_job[sid] = jid
-            elif e == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                sub, comp = si.get("Submission Time"), si.get("Completion Time")
-                if sub and comp:
-                    stage_info[sid] = {"wall": (comp - sub) / 1e3}
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                tm = ev.get("Task Metrics") or {}
-                task_time[sid] = task_time.get(sid, 0.0) + (
-                    tm.get("Executor Run Time", 0) / 1e3
-                )
 
     out: dict[str, dict] = {}
     for name in names:

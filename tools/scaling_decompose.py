@@ -31,53 +31,53 @@ import os
 
 
 def _event_files(path: str) -> list[str]:
-    """Resolve a dir (possibly a rolled ``eventlog_v2_<app>/`` layout with
-    ``events_1_...zstd, events_2_...`` parts) to an ordered list of event
-    files; a plain file is returned as-is."""
+    """Resolve an event-log path to the ordered files of ONE application.
+
+    ``path`` may be a log file, a rolled ``eventlog_v2_<app>/`` directory
+    (``events_<idx>_<app>[.zstd]`` parts, read in index order), or a
+    ``spark.eventLog.dir`` that a reused session dir fills with one log per
+    run — then the NEWEST application is read, not a concatenation of every
+    run."""
     if not os.path.isdir(path):
         return [path]
-    # a reused eventlog dir accumulates one eventlog_v2_<appid>/ per run —
-    # decompose the NEWEST app only, not a concatenation of every run
-    apps = [
-        os.path.join(path, d)
-        for d in os.listdir(path)
-        if d.startswith("eventlog_v2_")
-    ]
-    if apps:
-        path = max(apps, key=os.path.getmtime)
-    parts = []
-    for root, _dirs, names in os.walk(path):
-        for f in names:
-            if f.startswith("events_"):
-                # rolled layout: events_<idx>_<appid>[.zstd] — order by idx
-                try:
-                    idx = int(f.split("_")[1])
-                except (IndexError, ValueError):
-                    idx = 0
-                parts.append((idx, os.path.join(root, f)))
-            elif not f.startswith(".") and not f.startswith("appstatus"):
-                parts.append((0, os.path.join(root, f)))
-    parts.sort()
-    return [p for _i, p in parts]
+    names = [n for n in os.listdir(path) if not n.startswith(".")]
+    parts = [n for n in names if n.startswith("events_")]
+    if parts:
+        # rolled layout: events_<idx>_<appid>[.zstd] — order by idx
+        parts.sort(key=lambda n: int(n.split("_")[1]))
+        return [os.path.join(path, n) for n in parts]
+    apps = [os.path.join(path, n) for n in names if not n.startswith("appstatus")]
+    if not apps:
+        return []
+    return _event_files(max(apps, key=os.path.getmtime))
 
 
 def load_events(path: str):
+    """Yield the JSON events of the application log at ``path`` (see
+    :func:`_event_files`), decompressing ``.zstd`` parts as a stream."""
+    import subprocess
+
     for part in _event_files(path):
         if part.endswith(".zstd"):
-            import subprocess
-            import tempfile
+            with subprocess.Popen(
+                ["zstd", "-dcq", part], stdout=subprocess.PIPE, encoding="utf-8"
+            ) as proc:
+                yield from _parse(proc.stdout)
+            if proc.returncode:
+                raise RuntimeError(f"zstd -d failed on {part}")
+        else:
+            with open(part, encoding="utf-8") as fh:
+                yield from _parse(fh)
 
-            tmp = tempfile.NamedTemporaryFile(suffix=".json", delete=False)
-            subprocess.run(["unzstd", "-qf", part, "-o", tmp.name], check=True)
-            part = tmp.name
-        with open(part) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    try:
-                        yield json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
+
+def _parse(lines):
+    for line in lines:
+        line = line.strip()
+        if line:
+            try:
+                yield json.loads(line)
+            except json.JSONDecodeError:
+                continue
 
 
 def decompose(log: str, cores: int) -> dict:

@@ -5,33 +5,20 @@ time, and effective parallelism (= summed task time / stage wall).  Stages
 whose effective parallelism is far below the core count are the ones that
 cap strong scaling; gaps between stages are driver/bookkeeping time.
 
-Usage: python tools/stage_profile.py /tmp/evlog8 [--cores 8] [--top 25]
+Usage: python tools/stage_profile.py <event log file or dir> [--cores 8] [--top 25]
+
+Reads plain, zstd and rolled logs (tools/scaling_decompose.load_events).
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
+import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def load_events(path: str):
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(".")
-        ]
-        files.sort(key=os.path.getmtime)
-        path = files[-1]
-    with open(path) as fh:
-        for line in fh:
-            line = line.strip()
-            if line:
-                try:
-                    yield json.loads(line)
-                except json.JSONDecodeError:
-                    continue
+from tools.scaling_decompose import load_events
 
 
 def main() -> None:
