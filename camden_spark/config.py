@@ -84,7 +84,6 @@ class DedupConfig:
     #: before the self-joins; 0 = auto (2x the session's defaultParallelism —
     #: at production scale set explicitly to O(executors x cores x 3))
     band_partitions: int = 0
-    cc_max_iterations: int = 50     #: connected-components fixpoint cap
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.minhash_perms:

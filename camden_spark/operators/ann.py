@@ -206,8 +206,14 @@ def _spherical_kmeans(
     return C
 
 
+#: rows the IVF quantizer trains on, and so the most cells it can produce:
+#: the default of both train_ivf_centroids(sample_rows) and
+#: auto_ivf_params(max_cells)
+IVF_SAMPLE_ROWS = 20_000
+
+
 def auto_ivf_params(
-    n_rows: int, max_cells: int = 20_000
+    n_rows: int, max_cells: int = IVF_SAMPLE_ROWS
 ) -> tuple[int, int]:
     """Corpus-size-scaled IVF operating point: ``n_cells ≈ 1.4·√n`` (the
     √n rule every IVF library documents — cells stay O(√n) rows so the
@@ -229,9 +235,7 @@ def auto_ivf_params(
     count while ``n_probe`` kept scaling with the UNclamped value, so the
     effective probe fraction drifted from 1/8 toward exhaustive (the
     all-pairs cliff this function exists to avoid) at exactly the corpus
-    sizes the engine targets.  Clamp FIRST, then derive n_probe, and keep
-    the caller's ``train_ivf_centroids(sample_rows=...)`` in sync (pass
-    the same value here as ``max_cells``)."""
+    sizes the engine targets.  Clamp FIRST, then derive n_probe."""
     n_cells = max(8, min(max_cells, round(1.4 * math.sqrt(max(1, n_rows)))))
     n_probe = min(n_cells, max(6, round(n_cells / 8)))
     return n_cells, n_probe
@@ -240,7 +244,7 @@ def auto_ivf_params(
 def train_ivf_centroids(
     vectors: DataFrame,
     n_cells: int = 64,
-    sample_rows: int = 20_000,
+    sample_rows: int = IVF_SAMPLE_ROWS,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",

@@ -1,69 +1,99 @@
 """Connected components over candidate pairs (north rule F6).
 
-DataFrame-native min-label propagation with POINTER JUMPING: every node
-starts labeled with itself (its url); each iteration (a) joins labels across
-edges (both directions) and takes the min neighbor label, and (b) shortcuts
-through the label graph (label(u) ← label(label(u))).  The jump step doubles
-the distance a label travels per iteration, so convergence is O(log diameter)
-instead of O(diameter) — the same asymptotics as alternating
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond"), with a simpler dataflow: labels only ever decrease and stay inside
-the component, so the plain-propagation fixpoint argument still applies
-verbatim.  Duplicate clusters from similarity joins are near-cliques
-(1-2 iterations); the jump matters for substring-containment CHAINS, whose
-diameter grows with corpus size.  ``cfg.cc_max_iterations`` caps the loop
-defensively.
+Union-find CONTRACTION, after BTS (load-balanced distributed union-find,
+ICDE 2024): the edge set is split into ``k`` partitions and each partition
+runs a numpy union-find (:func:`_min_roots`) in ``mapInPandas``, emitting
+``(url, local_root)`` for every url it holds.  Node codes come from
+``np.unique``, so codes sort like urls and every local root is the minimum
+url of its local component.  A url held by several partitions links their
+local roots: ``groupBy(url)`` → min root + ``collect_set`` of roots, exploded
+into root edges, is the next round's (contracted) graph, on ``k/2``
+partitions.  The round on ONE partition sees every remaining edge, so its
+roots are final.  Rounds are fixed up front: one count of the input edges
+sets ``k0 = ceil(edges / EDGES_PER_TASK)``, and CC ends after exactly
+``ceil(log2 k0) + 1`` rounds — no convergence test, no iteration cap, no
+split-cluster outcome.  Any edge set of at most ``EDGES_PER_TASK`` edges (the
+benchmark workloads and sf0.1 included) takes one round, whatever the
+graph's diameter.  Above that, the last round's single task relies on
+contraction: duplicate clusters are near-cliques, so a partition usually
+reduces its share of a cluster to one root, and later rounds carry links
+between roots instead of the cluster's pairs.
 
-Scale notes:
+Each url's cluster is its last-round root, found by composing the per-round
+``url → root`` maps from the last round back to the first.  cluster_id is
+therefore the component's minimum url, the deterministic first-wins
+canonical member (camden keeps element 0 of each group, reference
+src/operations.rs:50 — ours is the lexicographic minimum, deterministic under
+any parallelism).  A round's edges are derived from the previous round's
+output by aggregation, never by joining that output with itself, so
+Catalyst's size estimate grows with the round count instead of compounding.
 
-* lineage is truncated every iteration — Catalyst cannot optimize across
-  iterations and the plan would otherwise grow exponentially (SURVEY §4.2.3).
-  Two truncation modes:
-  - default: ``localCheckpoint`` — executor-MEMORY-backed.  Fast, but on a
-    real cluster one executor loss mid-CC kills the job with no resume (the
-    blocks are not replicated to disk).
-  - ``checkpoint_dir=...`` — RELIABLE: per-iteration state is written to
-    (and re-read from) parquet under the given directory, which may be any
-    Hadoop-visible store (HDFS/S3/GCS).  Executor loss now costs one task
-    retry, not the job; this is the 100×-scale mode, the analog of the F9
-    snapshot store for the iterative stage (the reference's non-resumable
-    move stage, src/operations.rs:52-55, is the failure mode both exist to
-    fix).
-* the convergence check is an ``observe`` metric collected during the
-  truncation's own materialization job (the localCheckpoint or the parquet
-  write) — zero extra jobs per iteration
-* the loop iterates on 8-byte hashed node ids, not url strings: every
-  iteration shuffles the full label table (twice: neighbor-min + pointer
-  jump), and Common-Crawl urls average ~60-80 bytes — at 10^12 docs that is
-  an order of magnitude of needless exchange bytes per iteration.  Node ids
-  are ``xxhash64(seed, url)``; a driver-side uniqueness check (one tiny agg
-  over the id table) retries with the next seed on collision (p ≈ n²/2^65
-  per seed), so ids are injective BY CONSTRUCTION, not by hope.  If EVERY
-  seed collides (the birthday regime, node set near 2^32), the loop falls
-  back to url-string node ids instead of failing — correct at any scale,
-  paying the wider shuffle only where 64-bit ids mathematically cannot
-  work.  The
-  url→min-url cluster semantics are restored after convergence by ONE
-  groupBy(component) → min(url) join — cluster ids remain the lexicographic
-  min url, the deterministic first-wins canonical member (camden keeps
-  element 0 of each group, reference src/operations.rs:50 — ours is the
-  lexicographic minimum, deterministic under any parallelism).
+Lineage is truncated after the input edges and after every round, in one of
+two modes:
+
+* default: ``localCheckpoint`` — executor-MEMORY-backed.  Fast, but on a
+  real cluster one executor loss mid-CC kills the job with no resume (the
+  blocks are not replicated to disk).
+* ``checkpoint_dir=...`` — RELIABLE: the edges and each round's labels are
+  written to (and re-read from) parquet under the given directory, which may
+  be any Hadoop-visible store (HDFS/S3/GCS).  Executor loss now costs one
+  task retry, not the job; this is the 100×-scale mode, the analog of the F9
+  snapshot store for the iterative stage (the reference's non-resumable move
+  stage, src/operations.rs:52-55, is the failure mode both exist to fix).
 """
 
 from __future__ import annotations
 
+import math
 import os
-import warnings
+from typing import Iterator
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Window
 
 from camden_spark.config import DedupConfig
 from camden_spark.plans.caches import persistent_rdd_ids, release_blocks_since
 
-#: seeds tried for injective 64-bit node ids before the url-string fallback
-#: (module-level so tests can monkeypatch it to force the fallback path)
-ID_SEEDS: tuple[int, ...] = tuple(range(42, 48))
+#: edges one union-find task is sized for; sets the first round's partition
+#: count (module-level so tests can force the multi-round regime)
+EDGES_PER_TASK = 500_000
+
+
+def _min_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over node codes ``0..n-1`` and edges ``(a[i], b[i])``:
+    returns ``parent`` with ``parent[x]`` the smallest code in x's component.
+
+    Vectorized hook-and-compress: each pass hooks every root to the smallest
+    root it shares an edge with, then pointer-jumps until every node points
+    at a root.  ``parent[x] <= x`` throughout and a hook only joins roots of
+    one component, so a component's smallest code is its root."""
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        if np.array_equal(ra, rb):
+            return parent
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: the whole partition's edges → (url, local_root)."""
+    edges = [b for b in batches if len(b)]
+    if not edges:
+        return
+    pdf = pd.concat(edges, ignore_index=True)
+    urls, codes = np.unique(
+        np.concatenate([pdf["url_a"].to_numpy(), pdf["url_b"].to_numpy()]),
+        return_inverse=True,
+    )
+    parent = _min_roots(codes[: len(pdf)], codes[len(pdf):], len(urls))
+    yield pd.DataFrame({"url": urls, "root": urls[parent]})
 
 
 def connected_components(
@@ -76,19 +106,18 @@ def connected_components(
 
     cluster_id is the min url of the component.  Nodes not in any edge are
     absent (callers union singletons back with cluster_id = own url).
+    ``cfg`` is accepted for signature stability; no field of it applies.
 
-    Pass ``status`` (a dict) to receive ``{"converged": bool, "iterations":
-    int, "checkpoint": "local"|"reliable"}``; a capped-out run returns
-    possibly-split labels, so non-convergence warns loudly and is surfaced in
-    pipeline metrics instead of passing silently.
+    Pass ``status`` (a dict) to receive ``{"iterations": int, "checkpoint":
+    "local"|"reliable"}``; iterations is the contraction round count (≥ 1).
 
-    ``checkpoint_dir``: when set, per-iteration label state is persisted as
-    parquet under this directory instead of memory-backed ``localCheckpoint``
-    — survives executor loss (see module docstring).  The directory is
-    run-scoped scratch: iterations overwrite ``cc_iter_{0,1}`` alternately so
-    the footprint stays at two label tables regardless of iteration count.
+    ``checkpoint_dir``: when set, the edges and each round's labels are
+    persisted as parquet under this directory (``cc_edges``, ``cc_iter_<r>``)
+    instead of memory-backed ``localCheckpoint`` — survives executor loss
+    (see module docstring).  The directory is run-scoped scratch; the
+    returned frame reads every round's labels, so it must outlive the
+    result's consumers.
     """
-    cfg = cfg or DedupConfig()
     spark = edges.sparkSession
 
     # localCheckpoint-mode block bookkeeping (cache-hygiene, VERDICT r2 #7):
@@ -98,168 +127,63 @@ def connected_components(
     # session's persistent-RDD map around the whole CC run records every
     # block it created; freeing is deferred entirely to the session cache
     # registry (release_caches, once consumers are done with the returned
-    # frame).  Deliberately NOT per-iteration: bookkeeping must add zero
-    # work inside the hot loop (a per-truncate diff + eager frees measured
-    # ~1.5x on the full-pipeline wall), and the intermediates it would free
-    # early are small (url, label) tables.
+    # frame).
     before_cc = persistent_rdd_ids(spark) if checkpoint_dir is None else set()
 
     def truncate(df: DataFrame, name: str) -> DataFrame:
-        """Materialize + truncate lineage; the action also collects any
-        pending Observation riding ``df``."""
+        """Materialize + truncate lineage."""
         if checkpoint_dir is None:
             return df.localCheckpoint(eager=True)
         path = os.path.join(checkpoint_dir, name)
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    # --- long node ids (module docstring: labels shuffle 8-byte longs, not
-    # url strings).  nid = xxhash64(seed, url) is a pure projection — no join
-    # to relabel edges; injectivity is CHECKED (one tiny agg over the node
-    # table) and the seed bumped on collision.
-    raw_nodes = (
-        edges.select(F.col("url_a").alias("url"))
-        .union(edges.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
-    nodes = None
-    node_id_mode = "xxhash64"
-    seed = None
-    for seed in ID_SEEDS:
-        cand = raw_nodes.withColumn(
-            "nid", F.xxhash64(F.lit(seed), F.col("url"))
+    round_edges = truncate(edges.select("url_a", "url_b"), "cc_edges")
+    k = max(1, math.ceil(round_edges.count() / EDGES_PER_TASK))
+    rounds: list[DataFrame] = []
+    while True:
+        local = round_edges.repartition(k, "url_a", "url_b").mapInPandas(
+            _local_roots, "url string, root string"
         )
-        cand = truncate(cand, "cc_nodes")
-        n_urls, n_ids = cand.agg(
-            F.count("*"), F.countDistinct("nid")
-        ).first()
-        if n_urls == n_ids:
-            nodes = cand
+        if k > 1:  # a url held by several partitions links their roots
+            local = local.groupBy("url").agg(
+                F.min("root").alias("root"),
+                F.collect_set("root").alias("roots"),
+            )
+        labels = truncate(local, f"cc_iter_{len(rounds) + 1}")
+        rounds.append(labels)
+        if k == 1:
             break
-    if nodes is not None:
-        def nid(col: str, _seed: int = seed) -> F.Column:
-            return F.xxhash64(F.lit(_seed), F.col(col))
-    else:
-        # Seed exhaustion is NOT a fluke at scale: once the node set nears
-        # 2^32, birthday collisions are near-certain for EVERY 64-bit seed
-        # (p ≈ n²/2^65 per seed), so raising here would make CC unavailable
-        # at exactly the scale it was built for.  Fall back to url-string
-        # node ids — the loop below is generic over the nid type (joins,
-        # min, least, < all work on strings), so correctness holds at any
-        # scale; the cost is the wider per-iteration label shuffle the long
-        # ids exist to avoid, paid only in the collision regime.
-        node_id_mode = "url"
-        warnings.warn(
-            "connected_components: xxhash64 node ids collided for every "
-            "seed in ID_SEEDS (expected only near ~2^32 nodes) — falling "
-            "back to url-string node ids (correct, wider shuffle)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        nodes = truncate(
-            raw_nodes.withColumn("nid", F.col("url")), "cc_nodes"
-        )
-
-        def nid(col: str) -> F.Column:
-            return F.col(col)
-
-    sym = truncate(
-        edges.select(nid("url_a").alias("src"), nid("url_b").alias("dst"))
-        .union(edges.select(nid("url_b").alias("src"), nid("url_a").alias("dst")))
-        .dropDuplicates(["src", "dst"]),
-        "cc_edges",
-    )
-    # identity init straight off the CHECKPOINTED node table: sym carries
-    # both edge directions, so distinct(sym.src) == nodes' nid set — the
-    # projection costs nothing and saves the init's own distinct exchange
-    # + truncation job the previous derivation paid
-    labels = nodes.select("nid", F.col("nid").alias("label"))
-    converged = False
-    iterations = 0
-    for _ in range(cfg.cc_max_iterations):
-        iterations += 1
-        # (a) neighbor labels: for each dst, min label over incoming src labels
-        nbr = (
-            sym.join(labels.withColumnRenamed("nid", "src"), "src")
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("dst", "nid")
-        )
-        # (b) pointer jump: label-of-label.  label(u) is always a node of u's
-        # component that appears in `labels` (it started as identity and only
-        # ever moves to smaller member ids), so the join always matches; the
-        # coalesce is belt-and-braces for the left join.
-        jump = labels.select(
-            F.col("nid").alias("_pj_nid"), F.col("label").alias("_pj_label")
-        )
-        # the convergence check rides the truncation's materialization job as
-        # an observed metric — zero extra jobs per iteration (vs a separate
-        # isEmpty/count action)
-        obs = Observation(f"cc_changed_{iterations}")
-        # iteration 1 runs on IDENTITY labels, where the pointer jump is a
-        # provable no-op (label(label(u)) = label(u) = u) — skip its join
-        # (and the exchanges/broadcasts it materializes) entirely
-        stepped = labels.join(nbr, "nid", "left")
-        if iterations > 1:
-            stepped = stepped.join(
-                jump, F.col("label") == F.col("_pj_nid"), "left"
-            )
-        else:
-            stepped = stepped.withColumn(
-                "_pj_label", F.lit(None).cast(labels.schema["label"].dataType)
-            )
-        stepped = (
-            stepped
-            .select(
-                "nid",
-                F.col("label").alias("_old"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_label"), F.col("label")),
-                    F.coalesce(F.col("_pj_label"), F.col("label")),
-                ).alias("label"),
-            )
-            .select(
-                "nid",
-                "label",
-                (F.col("label") < F.col("_old")).alias("changed"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("changed").cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-        )
-        new_labels = truncate(stepped, f"cc_iter_{iterations % 2}")
-        jmap = obs._jo.getOrEmpty()  # .get would block if no action ran
-        if not jmap.isEmpty():
-            converged = int(jmap.get("changed").get()) == 0
-        else:  # defensive: metric not collected — fall back to a scan
-            converged = new_labels.filter(F.col("changed")).isEmpty()
-        labels = new_labels.drop("changed")
-        if converged:
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components hit cc_max_iterations="
-            f"{cfg.cc_max_iterations} before the label fixpoint — clusters "
-            f"may be split; raise cc_max_iterations",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        round_edges = labels.select(
+            F.col("root").alias("url_a"), F.explode("roots").alias("url_b")
+        ).filter(F.col("url_a") != F.col("url_b"))
+        k = math.ceil(k / 2)
     if status is not None:
-        status["converged"] = converged
-        status["iterations"] = iterations
-        status["checkpoint"] = "local" if checkpoint_dir is None else "reliable"
-        status["node_id"] = node_id_mode
+        status["iterations"] = len(rounds)
+        status["checkpoint"] = (
+            "local" if checkpoint_dir is None else "reliable"
+        )
     if checkpoint_dir is None:
         release_blocks_since(spark, before_cc)
-    # restore url-keyed, min-URL cluster semantics: ONE groupBy(component) →
-    # min(url) after convergence replaces per-iteration string shuffles
-    comp_urls = labels.join(nodes, "nid").select("url", "label")
-    canon = comp_urls.groupBy("label").agg(F.min("url").alias("cluster_id"))
-    return comp_urls.join(canon, "label").select("url", "cluster_id")
+    # compose the url → root maps, last round first.  The next round's
+    # (root, cluster_id) rows ride a union keyed by root and reach each url
+    # through a window max, not a join: a join's size estimate is the
+    # PRODUCT of its inputs', a union's their sum.  A root absent from the
+    # next round had no link to another root, so it is already final.
+    null = F.lit(None).cast("string")
+    cluster = F.max("cluster_id").over(Window.partitionBy("root"))
+    clusters = rounds[-1].select("url", F.col("root").alias("cluster_id"))
+    for labels in reversed(rounds[:-1]):
+        nxt = clusters.select(
+            null.alias("url"), F.col("url").alias("root"), "cluster_id"
+        )
+        clusters = (
+            labels.select("url", "root", null.alias("cluster_id"))
+            .unionByName(nxt)
+            .select("url", F.coalesce(cluster, "root").alias("cluster_id"))
+            .filter(F.col("url").isNotNull())
+        )
+    return clusters
 
 
 def incremental_clusters(
@@ -279,8 +203,8 @@ def incremental_clusters(
     connected components as (all old pairs) ∪ (new pairs) — stars are
     spanning trees of the old components.  Output is therefore IDENTICAL to
     batch CC over the full pair set (the property the driver oracle and
-    tests assert), while the old clusters contribute diameter ≤ 2
-    subgraphs, so iteration count is driven by the new batch alone.
+    tests assert), while each old cluster contributes one edge per
+    non-canonical member instead of all its pairs.
 
     ``prev``: (url, cluster_id) — prior assignments (singletons may be
     omitted; any url absent from both inputs is simply not emitted).

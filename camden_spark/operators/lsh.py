@@ -134,27 +134,20 @@ def verify_pairs_jaccard(
     """Exact-Jaccard verification of candidate pairs against the distinct
     shingle sets — JVM-side array_intersect/array_union, no UDF.
 
+    Callers pass pair-pruned shingles: every row of ``sig`` is materialized
+    and shuffled into the joins, so it should hold only urls that appear in
+    ``pairs`` (``plans/pipeline.lsh_pairs`` prunes pages before shingling).
+
     Returns (url_a, url_b, jaccard) for pairs ≥ cfg.jaccard_threshold.
     """
     cfg = cfg or DedupConfig()
-    pairs = track_cache(pairs)  # consumed 3x below (url set x2 + the join)
-    # prune the (wide, shingle-array-carrying) signature table to urls that
-    # actually appear in candidate pairs BEFORE the shuffle joins — the full
-    # corpus's shingle arrays must never ride an exchange for a small pair set
-    pair_urls = (
-        pairs.select(F.col("url_a").alias("url"))
-        .union(pairs.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
     # barrier, not bare lazy reuse: sh is joined TWICE below (side a and
     # side b) and AQE materializes the two join branches as concurrent
     # jobs — cold, they each recompute the shingle subtree (the duplicated
     # ~108 MB Arrow stages measured on the multi-executor scaling legs).
     # sh is pair-pruned, i.e. orders of magnitude smaller than the corpus,
     # which is exactly materialize_barrier's intended size class.
-    sh = materialize_barrier(
-        sig.select("url", "shingles").join(pair_urls, "url", "left_semi")
-    )
+    sh = materialize_barrier(sig.select("url", "shingles"))
     a = sh.select(
         F.col("url").alias("url_a"), F.col("shingles").alias("shingles_a")
     )

@@ -412,7 +412,7 @@ class DedupPipeline:
 
         def build_clusters() -> DataFrame:
             cc_status: dict = {}
-            # with a checkpoint dir configured, CC's per-iteration state uses
+            # with a checkpoint dir configured, CC's per-round state uses
             # the RELIABLE parquet path (survives executor loss) instead of
             # memory-backed localCheckpoint — same store, run-scoped scratch
             cc_ckpt = (
@@ -429,7 +429,6 @@ class DedupPipeline:
                 status=cc_status,
                 checkpoint_dir=cc_ckpt,
             )
-            # surfaced, never silent: a capped-out CC returns split clusters
             metrics["cc"] = cc_status
             return out
 

@@ -150,45 +150,9 @@ def test_connected_components_chain(spark):
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_nonconvergence_is_loud(spark):
-    """A path graph longer than cc_max_iterations must set converged=False
-    and warn — capped-out CC returns split labels and must never be silent."""
-    import warnings as _warnings
-
-    from camden_spark.config import DedupConfig
-
-    n = 12
-    nodes = [f"n{i:03d}" for i in range(n)]
-    edges = spark.createDataFrame(
-        [(nodes[i], nodes[i + 1]) for i in range(n - 1)], ["url_a", "url_b"]
-    )
-    cfg = DedupConfig(cc_max_iterations=2)  # diameter ~11 >> 2
-    status: dict = {}
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        connected_components(edges, cfg, status=status).collect()
-    assert status["converged"] is False
-    assert status["iterations"] == 2
-    assert any("cc_max_iterations" in str(w.message) for w in caught)
-    # and a sufficient cap converges with the flag set
-    status2: dict = {}
-    comp = {
-        r["url"]: r["cluster_id"]
-        for r in connected_components(edges, status=status2).collect()
-    }
-    assert status2["converged"] is True
-    assert set(comp.values()) == {nodes[0]}
-
-
 def test_connected_components_pointer_jump_fast_on_chains(spark):
-    """A 40-node path graph (diameter 39) must converge in O(log diameter)
-    iterations, far under the 39 plain min-label propagation needs.
-
-    Note the constant: with the loop's hashed 8-byte node ids the min label
-    sits at a RANDOM chain position and intermediate labels are unordered,
-    so jumps shortcut less aggressively than they did over monotone url
-    labels (measured: 15 iterations vs 8 pre-hashing) — still exponentially
-    better than propagation, which is what this guards."""
+    """A 40-node path graph (diameter 39) is one contraction round: CC's
+    round count follows the edge count, never the diameter."""
     n = 40
     nodes = [f"n{i:03d}" for i in range(n)]
     edges = spark.createDataFrame(
@@ -199,12 +163,89 @@ def test_connected_components_pointer_jump_fast_on_chains(spark):
         r["url"]: r["cluster_id"]
         for r in connected_components(edges, status=status).collect()
     }
-    assert status["converged"] is True
     assert set(comp.values()) == {nodes[0]}
-    assert status["iterations"] <= 16, (
-        f"pointer jumping should converge a 39-diameter chain in O(log d) "
-        f"iterations, took {status['iterations']}"
+    assert status["iterations"] == 1
+
+
+def _plan_size_bits(df) -> int:
+    """Bit length of the optimized plan's sizeInBytes estimate, computed in
+    the JVM: py4j converts the BigInt through a decimal string, and Python
+    refuses int strings above 4,300 digits."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    digits = stats.productIterator().take(1).mkString()
+    return df.sparkSession._jvm.java.math.BigInteger(digits).bitLength()
+
+
+@pytest.mark.parametrize("edges_per_task", [None, 4], ids=["default", "4_per_task"])
+def test_connected_components_long_path(spark, monkeypatch, edges_per_task):
+    """A 1,000-node path (diameter 999) with shuffled labels: one cluster
+    labelled with the minimum url, after exactly ceil(log2 k0) + 1 rounds
+    (k0 = 250 at 4 edges per task: 9 rounds), with a plan size estimate
+    that stays near the input's own (createDataFrame: 2^63 - 1) instead of
+    compounding per round."""
+    import math
+    import random
+
+    from camden_spark.operators import components as C
+
+    if edges_per_task is not None:
+        monkeypatch.setattr(C, "EDGES_PER_TASK", edges_per_task)
+    n = 1000
+    nodes = [f"p{i:04d}" for i in range(n)]
+    random.Random(5).shuffle(nodes)
+    edges = spark.createDataFrame(
+        [(nodes[i], nodes[i + 1]) for i in range(n - 1)], ["url_a", "url_b"]
     )
+    status: dict = {}
+    out = C.connected_components(edges, status=status)
+    comp = {r["url"]: r["cluster_id"] for r in out.collect()}
+    assert len(comp) == n
+    assert set(comp.values()) == {min(nodes)}
+    k0 = math.ceil((n - 1) / C.EDGES_PER_TASK)
+    assert status["iterations"] == math.ceil(math.log2(k0)) + 1
+    assert status["iterations"] == (9 if edges_per_task else 1)
+    assert _plan_size_bits(out) <= 72
+
+
+def test_connected_components_multi_round_matches_union_find(spark, monkeypatch):
+    """Several contraction rounds on a seeded random graph — a 200-leaf
+    star, isolated edges, random sparse edges — equal a plain-Python
+    union-find's min-url components."""
+    import random
+
+    from camden_spark.operators import components as C
+
+    monkeypatch.setattr(C, "EDGES_PER_TASK", 4)
+    rng = random.Random(11)
+    urls = [f"u{i:04d}" for i in range(600)]
+    rng.shuffle(urls)
+    star, leaves, rest = urls[0], urls[1:201], urls[201:]
+    pairs = [(star, leaf) for leaf in leaves]
+    pairs += [(rest[i], rest[i + 1]) for i in range(0, 100, 2)]  # isolated
+    pairs += [tuple(rng.sample(rest[100:] + leaves[:20], 2)) for _ in range(250)]
+    rng.shuffle(pairs)
+
+    parent = {u: u for p in pairs for u in p}
+
+    def find(u: str) -> str:
+        while parent[u] != u:
+            parent[u] = parent[parent[u]]
+            u = parent[u]
+        return u
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    expected = {u: find(u) for u in parent}
+
+    status: dict = {}
+    edges = spark.createDataFrame(pairs, ["url_a", "url_b"])
+    got = {
+        r["url"]: r["cluster_id"]
+        for r in C.connected_components(edges, status=status).collect()
+    }
+    assert got == expected
+    assert status["iterations"] > 1
 
 
 def test_connected_components_reliable_checkpoint(tmp_path, spark):
@@ -396,37 +437,3 @@ def test_incremental_clusters_prev_missing_canonical_self_row(spark):
     new = spark.createDataFrame([("c", "d")], ["url_a", "url_b"])
     got = {r["url"]: r["cluster_id"] for r in incremental_clusters(prev, new).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
-
-
-def test_connected_components_url_fallback_when_seeds_exhausted(spark, monkeypatch):
-    """With every 64-bit id seed exhausted (the ~2^32-node birthday regime,
-    forced here by emptying ID_SEEDS), CC must fall back to url-string node
-    ids — same clusters, loud warning, status says node_id='url'."""
-    import warnings as _warnings
-
-    from camden_spark.operators import components as C
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], ["url_a", "url_b"]
-    )
-    monkeypatch.setattr(C, "ID_SEEDS", ())
-    status: dict = {}
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        comp = {
-            r["url"]: r["cluster_id"]
-            for r in C.connected_components(edges, status=status).collect()
-        }
-    assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    assert status["node_id"] == "url"
-    assert status["converged"] is True
-    assert any("url-string node ids" in str(w.message) for w in caught)
-
-
-def test_connected_components_status_reports_hashed_ids(spark):
-    status: dict = {}
-    edges = spark.createDataFrame([("a", "b")], ["url_a", "url_b"])
-    from camden_spark.operators.components import connected_components
-
-    connected_components(edges, status=status).collect()
-    assert status["node_id"] == "xxhash64"

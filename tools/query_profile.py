@@ -1,8 +1,8 @@
 """Per-query job/driver-gap decomposition for the bench headline queries.
 
-Runs each headline query exactly like bench.py (_force full-row checksum),
-labels every query's jobs via setJobDescription, writes a Spark event log,
-then attributes per query:
+Runs each headline query once, cold, exactly like bench.py (_force full-row
+checksum), labels every query's jobs via setJobDescription, writes a Spark
+event log, then attributes per query:
 
 * wall      — driver-side wall clock around the forced action(s)
 * n_jobs    — Spark jobs the query submitted
@@ -53,18 +53,14 @@ def main() -> None:
     lookup = {**RETIRED_ROWS_ONLY, **QUERIES}
     overrides = {"near_dup_clusters": bench._near_dup_clusters_bench}
     walls: dict[str, float] = {}
-    reps = max(1, int(os.environ.get("QP_REPS", "1")))
-    for _rep in range(reps):
-        for name in names:
-            fn = overrides.get(name, lookup[name])
-            spark.sparkContext.setJobDescription(f"qp:{name}")
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            bench._force(df)
-            w = time.time() - t0
-            walls[name] = min(walls.get(name, 1e9), w)
-            spark.sparkContext.setJobDescription(None)
-            release_caches()
+    for name in names:
+        fn = overrides.get(name, lookup[name])
+        spark.sparkContext.setJobDescription(f"qp:{name}")
+        t0 = time.time()
+        bench._force(fn(spark, sf_dir))
+        walls[name] = time.time() - t0
+        spark.sparkContext.setJobDescription(None)
+        release_caches()
     spark.stop()
 
     # ---- parse the event log --------------------------------------------
