@@ -1,32 +1,37 @@
 """Connected components over candidate pairs (north rule F6).
 
 Union-find CONTRACTION, after BTS (load-balanced distributed union-find,
-ICDE 2024): the edge set is split into ``k`` partitions and each partition
-runs a numpy union-find (:func:`_min_roots`) in ``mapInPandas``, emitting
-``(url, local_root)`` for every url it holds.  Node codes come from
-``np.unique``, so codes sort like urls and every local root is the minimum
-url of its local component.  A url held by several partitions links their
-local roots: ``groupBy(url)`` → min root + ``collect_set`` of roots, exploded
-into root edges, is the next round's (contracted) graph, on ``k/2``
-partitions.  The round on ONE partition sees every remaining edge, so its
-roots are final.  Rounds are fixed up front: one count of the input edges
-sets ``k0 = ceil(edges / EDGES_PER_TASK)``, and CC ends after exactly
-``ceil(log2 k0) + 1`` rounds — no convergence test, no iteration cap, no
-split-cluster outcome.  Any edge set of at most ``EDGES_PER_TASK`` edges (the
-benchmark workloads and sf0.1 included) takes one round, whatever the
-graph's diameter.  Above that, the last round's single task relies on
-contraction: duplicate clusters are near-cliques, so a partition usually
-reduces its share of a cluster to one root, and later rounds carry links
-between roots instead of the cluster's pairs.
+ICDE 2024).  Every round splits its edges into ``k = ceil(edges /
+EDGES_PER_TASK)`` partitions, so no task holds more than about
+``EDGES_PER_TASK`` edges, and each partition runs a numpy union-find
+(:func:`_min_roots`) in ``mapInPandas``, emitting ``(url, local_root)`` for
+every url it holds.  A url held by several partitions links their local
+roots: ``groupBy(url)`` → its lowest-ranked root + ``collect_set`` of roots,
+exploded into a star of root edges, is the next round's (contracted) graph.
+The next round partitions those edges by the url that made them, so each
+url's star is merged in one task.  The round whose edges fit ONE partition
+sees every remaining edge, so its roots are final.
 
-Each url's cluster is its last-round root, found by composing the per-round
-``url → root`` maps from the last round back to the first.  cluster_id is
-therefore the component's minimum url, the deterministic first-wins
-canonical member (camden keeps element 0 of each group, reference
-src/operations.rs:50 — ours is the lexicographic minimum, deterministic under
-any parallelism).  A round's edges are derived from the previous round's
-output by aggregation, never by joining that output with itself, so
-Catalyst's size estimate grows with the round count instead of compounding.
+Roots are ranked by ``(hash(url), url)``, not by url: along a chain whose
+urls sort in order (successive revisions of a page) a url-ranked root would
+move one node per round.  Hash ranks make roots random along any chain, so a
+round removes a constant share of its nodes instead of one.  Termination
+needs no cap and no convergence test: a component's highest-ranked node is
+never a local root, so every round loses at least one node per component,
+and the loop ends once the remaining edges fit one task (or none remain).
+Any edge set of at most ``EDGES_PER_TASK`` edges (the benchmark workloads
+and sf0.1 included) takes one round, whatever the graph's diameter.
+``status["rounds"]`` records each round's partitions, edges and widest task.
+
+Each url's cluster is found by composing the per-round ``url → root`` maps
+from the last round back to the first, then taking the minimum url of each
+final root's members.  cluster_id is therefore the component's minimum url,
+the deterministic first-wins canonical member (camden keeps element 0 of
+each group, reference src/operations.rs:50 — ours is the lexicographic
+minimum, deterministic under any parallelism).  A round's edges are derived
+from the previous round's output by aggregation, never by joining that
+output with itself, so Catalyst's size estimate grows with the round count
+instead of compounding.
 
 Lineage is truncated after the input edges and after every round, in one of
 two modes:
@@ -56,8 +61,10 @@ from pyspark.sql import DataFrame, Window
 from camden_spark.config import DedupConfig
 from camden_spark.plans.caches import persistent_rdd_ids, release_blocks_since
 
-#: edges one union-find task is sized for; sets the first round's partition
-#: count (module-level so tests can force the multi-round regime)
+#: edges one union-find task is sized for; sets every round's partition
+#: count (module-level so tests can force the multi-round regime).  A task
+#: costs about 10 µs and 170 bytes per edge on one Xeon core, so 500,000
+#: edges is ~5 s and ~85 MB (BENCH/cc_rounds.json, ``kernel`` rows)
 EDGES_PER_TASK = 500_000
 
 
@@ -83,17 +90,23 @@ def _min_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
 
 
 def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: the whole partition's edges → (url, local_root)."""
+    """mapInPandas body: the whole partition's edges → one row per url with
+    its local root, the root's rank hash and the partition's edge count."""
     edges = [b for b in batches if len(b)]
     if not edges:
         return
     pdf = pd.concat(edges, ignore_index=True)
+    m = len(pdf)
     urls, codes = np.unique(
         np.concatenate([pdf["url_a"].to_numpy(), pdf["url_b"].to_numpy()]),
         return_inverse=True,
     )
-    parent = _min_roots(codes[: len(pdf)], codes[len(pdf):], len(urls))
-    yield pd.DataFrame({"url": urls, "root": urls[parent]})
+    h = pd.util.hash_array(urls).view(np.int64)
+    order = np.lexsort((np.arange(len(urls)), h))  # rank → code
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(urls))
+    root = order[_min_roots(rank[codes[:m]], rank[codes[m:]], len(urls))[rank]]
+    yield pd.DataFrame({"url": urls, "root": urls[root], "root_h": h[root], "n": m})
 
 
 def connected_components(
@@ -109,7 +122,9 @@ def connected_components(
     ``cfg`` is accepted for signature stability; no field of it applies.
 
     Pass ``status`` (a dict) to receive ``{"iterations": int, "checkpoint":
-    "local"|"reliable"}``; iterations is the contraction round count (≥ 1).
+    "local"|"reliable", "rounds": [{"partitions", "edges", "widest_task"}]}``;
+    iterations is the contraction round count (≥ 1) and ``widest_task`` the
+    largest edge count one union-find task of that round held.
 
     ``checkpoint_dir``: when set, the edges and each round's labels are
     persisted as parquet under this directory (``cc_edges``, ``cc_iter_<r>``)
@@ -139,51 +154,73 @@ def connected_components(
         return spark.read.parquet(path)
 
     round_edges = truncate(edges.select("url_a", "url_b"), "cc_edges")
-    k = max(1, math.ceil(round_edges.count() / EDGES_PER_TASK))
+    n_edges = round_edges.count()
+    keys = ["url_a", "url_b"]
     rounds: list[DataFrame] = []
+    log: list[dict] = []
     while True:
-        local = round_edges.repartition(k, "url_a", "url_b").mapInPandas(
-            _local_roots, "url string, root string"
+        k = max(1, math.ceil(n_edges / EDGES_PER_TASK))
+        local = (
+            round_edges.repartition(k, *keys)
+            .select("url_a", "url_b")
+            .mapInPandas(_local_roots, "url string, root string, root_h long, n long")
         )
-        if k > 1:  # a url held by several partitions links their roots
-            local = local.groupBy("url").agg(
-                F.min("root").alias("root"),
-                F.collect_set("root").alias("roots"),
-            )
-        labels = truncate(local, f"cc_iter_{len(rounds) + 1}")
-        rounds.append(labels)
+        name = f"cc_iter_{len(rounds) + 1}"
         if k == 1:
+            rounds.append(truncate(local.select("url", "root"), name))
+            log.append({"partitions": 1, "edges": n_edges, "widest_task": n_edges})
+            break
+        # a url held by several partitions links their roots; its
+        # lowest-ranked root is its label
+        labels = truncate(
+            local.groupBy("url").agg(
+                F.min(F.struct("root_h", "root"))["root"].alias("root"),
+                F.collect_set("root").alias("roots"),
+                F.max("n").alias("n"),
+            ),
+            name,
+        )
+        rounds.append(labels)
+        next_edges, widest = labels.agg(
+            F.sum(F.size("roots") - 1), F.max("n")
+        ).first()
+        log.append({"partitions": k, "edges": n_edges, "widest_task": widest})
+        if not next_edges:  # every component closed inside one task
             break
         round_edges = labels.select(
-            F.col("root").alias("url_a"), F.explode("roots").alias("url_b")
+            "url", F.col("root").alias("url_a"), F.explode("roots").alias("url_b")
         ).filter(F.col("url_a") != F.col("url_b"))
-        k = math.ceil(k / 2)
+        keys = ["url"]
+        n_edges = next_edges
     if status is not None:
         status["iterations"] = len(rounds)
+        status["rounds"] = log
         status["checkpoint"] = (
             "local" if checkpoint_dir is None else "reliable"
         )
     if checkpoint_dir is None:
         release_blocks_since(spark, before_cc)
     # compose the url → root maps, last round first.  The next round's
-    # (root, cluster_id) rows ride a union keyed by root and reach each url
+    # (root, final) rows ride a union keyed by root and reach each url
     # through a window max, not a join: a join's size estimate is the
     # PRODUCT of its inputs', a union's their sum.  A root absent from the
     # next round had no link to another root, so it is already final.
     null = F.lit(None).cast("string")
-    cluster = F.max("cluster_id").over(Window.partitionBy("root"))
-    clusters = rounds[-1].select("url", F.col("root").alias("cluster_id"))
+    final = F.max("final").over(Window.partitionBy("root"))
+    clusters = rounds[-1]
     for labels in reversed(rounds[:-1]):
         nxt = clusters.select(
-            null.alias("url"), F.col("url").alias("root"), "cluster_id"
+            null.alias("url"), F.col("url").alias("root"), F.col("root").alias("final")
         )
         clusters = (
-            labels.select("url", "root", null.alias("cluster_id"))
+            labels.select("url", "root", null.alias("final"))
             .unionByName(nxt)
-            .select("url", F.coalesce(cluster, "root").alias("cluster_id"))
+            .select("url", F.coalesce(final, "root").alias("root"))
             .filter(F.col("url").isNotNull())
         )
-    return clusters
+    return clusters.select(
+        "url", F.min("url").over(Window.partitionBy("root")).alias("cluster_id")
+    )
 
 
 def incremental_clusters(

@@ -176,14 +176,20 @@ def _plan_size_bits(df) -> int:
     return df.sparkSession._jvm.java.math.BigInteger(digits).bitLength()
 
 
-@pytest.mark.parametrize("edges_per_task", [None, 4], ids=["default", "4_per_task"])
-def test_connected_components_long_path(spark, monkeypatch, edges_per_task):
-    """A 1,000-node path (diameter 999) with shuffled labels: one cluster
-    labelled with the minimum url, after exactly ceil(log2 k0) + 1 rounds
-    (k0 = 250 at 4 edges per task: 9 rounds), with a plan size estimate
-    that stays near the input's own (createDataFrame: 2^63 - 1) instead of
-    compounding per round."""
-    import math
+@pytest.mark.parametrize(
+    "edges_per_task,labels",
+    [(None, "shuffled"), (4, "shuffled"), (4, "sorted")],
+    ids=["default", "4_per_task", "4_per_task_sorted"],
+)
+def test_connected_components_long_path(spark, monkeypatch, edges_per_task, labels):
+    """A 1,000-node path (diameter 999): one cluster labelled with the
+    minimum url.  At the default budget that is one round.  At 4 edges per
+    task (250 first-round tasks) every round is re-split by its own edge
+    count, so no task holds more than a few times the budget and the last,
+    single task holds at most the budget — also when the urls sort along
+    the path, where url-ranked roots would move one node per round.  The
+    plan size estimate stays near the input's own (createDataFrame: 2^63 -
+    1) instead of compounding per round."""
     import random
 
     from camden_spark.operators import components as C
@@ -192,7 +198,8 @@ def test_connected_components_long_path(spark, monkeypatch, edges_per_task):
         monkeypatch.setattr(C, "EDGES_PER_TASK", edges_per_task)
     n = 1000
     nodes = [f"p{i:04d}" for i in range(n)]
-    random.Random(5).shuffle(nodes)
+    if labels == "shuffled":
+        random.Random(5).shuffle(nodes)
     edges = spark.createDataFrame(
         [(nodes[i], nodes[i + 1]) for i in range(n - 1)], ["url_a", "url_b"]
     )
@@ -201,9 +208,15 @@ def test_connected_components_long_path(spark, monkeypatch, edges_per_task):
     comp = {r["url"]: r["cluster_id"] for r in out.collect()}
     assert len(comp) == n
     assert set(comp.values()) == {min(nodes)}
-    k0 = math.ceil((n - 1) / C.EDGES_PER_TASK)
-    assert status["iterations"] == math.ceil(math.log2(k0)) + 1
-    assert status["iterations"] == (9 if edges_per_task else 1)
+    rounds = status["rounds"]
+    assert status["iterations"] == len(rounds)
+    assert rounds[0]["partitions"] == (250 if edges_per_task else 1)
+    assert rounds[0]["edges"] == n - 1
+    assert rounds[-1]["partitions"] == 1
+    assert rounds[-1]["edges"] <= C.EDGES_PER_TASK
+    assert max(r["widest_task"] for r in rounds) <= 4 * C.EDGES_PER_TASK
+    if edges_per_task is None:
+        assert status["iterations"] == 1
     assert _plan_size_bits(out) <= 72
 
 
